@@ -46,9 +46,10 @@ import graft.model.{CorpusStats, Doc, PostingList, TermStats, Turn}
   * `maxChunkPostings` within a shard is chunked so no single blob row is
   * unbounded. The alternative term-hash layout would prune single-term
   * lookups to one partition but makes multi-term intersection a shuffle;
-  * term-df lookups here are served by the (tiny, broadcastable) term_stats
-  * table instead, and parquet min/max stats on the sorted `term` column
-  * skip non-matching row groups inside each shard.
+  * term-df lookups here are served by the term_stats table instead —
+  * loaded once per generation into the driver ([[TermDictionary]]), so
+  * it must fit in driver memory — and parquet min/max stats on the sorted
+  * `term` column skip non-matching row groups inside each shard.
   *
   * Resume (north rule: "checkpointed per partition with lineage +
   * per-partition metrics so a killed run resumes without recomputation"):
@@ -98,7 +99,7 @@ object IndexBuilder {
     * without recomputation. */
   final class BuildCancelledException(msg: String) extends RuntimeException(msg)
 
-  private def hasSuccess(spark: SparkSession, dir: String): Boolean = {
+  private[index] def hasSuccess(spark: SparkSession, dir: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
@@ -737,7 +738,8 @@ object IndexBuilder {
     import spark.implicits._
     (IndexManifest.read(root) match {
       case Some(m) => IndexSnapshot.termStats(spark, root, m)
-      case None => spark.read.parquet(Paths(root).termStatsGen(0))
+      case None => spark.read.schema(IndexSnapshot.termStatsSchema)
+        .parquet(Paths(root).termStatsGen(0))
     }).select($"term", $"df", $"maxTf").as[TermStats]
   }
   def loadDocs(spark: SparkSession, root: String): Dataset[Doc] = {

@@ -224,10 +224,12 @@ object IndexManifest {
       .filter(k => k._1 == root && k._2 < current - CacheVersionWindow)
       .foreach(manifestCache.remove)
 
-  /** Drop the memo + hint trust for `root` (tests; also safe after
-    * deleting an index root out-of-band). */
-  private[graft] def invalidateCache(root: String): Unit =
+  /** Drop the memo + hint trust and the dictionary memo for `root`
+    * (tests; also safe after deleting an index root out-of-band). */
+  private[graft] def invalidateCache(root: String): Unit = {
     manifestCache.keys.filter(_._1 == root).foreach(manifestCache.remove)
+    TermDictionary.invalidate(root)
+  }
 
   /** Read one specific committed snapshot. */
   def readVersion(root: String, v: Long): Manifest = {

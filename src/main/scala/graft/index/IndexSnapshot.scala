@@ -71,7 +71,9 @@ object IndexSnapshot {
     StructField("posOff", ArrayType(IntegerType)),
     StructField("shard", IntegerType)))
 
-  private val termStatsSchema: StructType = StructType(Seq(
+  /** term_stats file columns — read with this schema, never inferred
+    * (inference is a Spark job of its own). */
+  private[index] val termStatsSchema: StructType = StructType(Seq(
     StructField("term", StringType), StructField("df", LongType),
     StructField("maxTf", IntegerType), StructField("sumTf", LongType)))
 
@@ -112,29 +114,12 @@ object IndexSnapshot {
     postings(spark, root,
       Manifest(0L, "", "", 0L, 0.0, entries))
 
-  // term_stats generation dirs are immutable once referenced, so the
-  // existence probe (a recursive listing) memoizes per (root, statsGen) —
-  // without this every uncached query's plan() pays one listing RPC
-  // (same class as the manifest-resolution fix, VERDICT r04 item 1).
-  // Only a POSITIVE probe memoizes: an in-flight maintenance op may ask
-  // about its not-yet-written generation and then write it.
-  private val termStatsPresent = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), Boolean]
-
+  /** The snapshot's dictionary relation. Queries read it through the
+    * per-generation [[TermDictionary]] memo, so the existence probe (a
+    * recursive listing) runs per load, not per query. */
   def termStats(spark: SparkSession, root: String, m: Manifest): DataFrame = {
     val p = termStatsPath(root, m)
-    val key = (root, m.statsGen)
-    val present = termStatsPresent.get(key) match {
-      case Some(v) => v
-      case None =>
-        val v = hasParquetFiles(spark, p)
-        if (v) {
-          if (termStatsPresent.size > 4096) termStatsPresent.clear() // bound
-          termStatsPresent.put(key, v)
-        }
-        v
-    }
-    if (present) spark.read.parquet(p)
+    if (hasParquetFiles(spark, p)) spark.read.schema(termStatsSchema).parquet(p)
     else empty(spark, termStatsSchema) // degenerate all-empty snapshot
   }
 

@@ -1,10 +1,12 @@
 package graft.query
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.StringUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.analysis.Analyzer
-import graft.index.{IndexBuilder, IndexManifest, IndexSnapshot, Manifest}
+import graft.index.{IndexBuilder, IndexManifest, IndexSnapshot, Manifest, TermDictionary}
 import graft.model.{CorpusStats, QueryFilter, QuerySpec, SearchHit, TermStats}
 
 /** Query engine over a built index (SURVEY.md §3.1 Spark lifecycle, §7.5).
@@ -19,12 +21,15 @@ import graft.model.{CorpusStats, QueryFilter, QuerySpec, SearchHit, TermStats}
   *    (O2/O4, TakeOrderedAndProject). The correctness backstop and the
   *    SQL-oracle twin.
   *
-  *  - `query` — compressed path: term_stats lookup (driver, broadcast-
-  *    sized) → partition-pruned posting scan (parquet row-group skipping
-  *    on the sorted `term` column) → shard-local AND-intersection / WAND
-  *    in `mapPartitions` (zero per-query shuffle) → per-shard top-k →
-  *    driver k-way merge. This is the scale path: per-query work is
-  *    O(postings of the query terms), network is O(shards × k).
+  *  - `query` — compressed path: df lookup in the snapshot's driver-
+  *    resident dictionary ([[TermDictionary]], loaded once per term_stats
+  *    generation — no Spark job per query) → partition-pruned posting
+  *    scan (parquet row-group skipping on the sorted `term` column) →
+  *    shard-local AND-intersection / WAND in `mapPartitions` (zero
+  *    per-query shuffle) → per-shard top-k → driver k-way merge. Per-query
+  *    work is O(postings of the query terms), network is O(shards × k);
+  *    the dictionary must fit in driver memory, as the broadcast join of
+  *    `queryNaive` already requires.
   *
   * Query-time semantics carried over from the reference:
   *  - terms analyzed with the SAME analyzer as the build
@@ -57,19 +62,17 @@ object SearchEngine {
       throw new IllegalStateException(s"no manifest at $root — index not built"))
 
   /** Driver-side "optimize" phase: dictionary lookup + stop cap + df-asc
-    * order (SURVEY.md §3.1 step 5). The dictionary probe is a filtered
-    * scan of the tiny term_stats table, not a full collect. */
+    * order (SURVEY.md §3.1 step 5). The lookup probes the pinned
+    * snapshot's memoized [[TermDictionary]] — no Spark job once the
+    * generation is loaded. Unknown terms are absent from the plan;
+    * `dropped` lists the stop-capped ones in query order. */
   def plan(spark: SparkSession, root: String, spec: QuerySpec,
            stats: CorpusStats, applyStopCap: Boolean = true,
            pinned: Option[Manifest] = None): Plan = {
-    import spark.implicits._
     if (spec.terms.isEmpty) return Plan(Vector.empty, Vector.empty, spec.mode, spec.k)
     val m = pinned.getOrElse(pinnedManifest(root))
-    val found = termStatsFor(spark, root, m)
-      .filter($"term".isin(spec.terms: _*))
-      .select($"term", $"df", $"maxTf")
-      .collect().toVector
-      .map(r => TermStats(r.getString(0), r.getLong(1), r.getInt(2)))
+    val dict = TermDictionary.of(spark, root, m)
+    val found = spec.terms.distinct.flatMap(dict.get)
     val cap = StopTermCap * stats.nDocs
     val (kept0, dropped) =
       if (applyStopCap) found.partition(_.df <= cap) else (found, Vector.empty)
@@ -1169,25 +1172,21 @@ object SearchEngine {
     *    phrase — nothing is silently dropped;
     *  - more than [[MaxPrefixExpansions]] matches throws (TooManyClauses)
     *    rather than running an unbounded disjunction.
-    * The expansion probe is one pushable StringStartsWith filter over the
-    * tiny term_stats table — O(matching terms) collected, never the
-    * dictionary; execution is the ordinary [[executePlan]] OR/WAND walk,
-    * so the whole query costs the same as an OR of the matched terms. */
+    * The expansion is a range scan of the snapshot's driver-resident
+    * [[TermDictionary]] from the prefix's lower bound (Spark's UTF-8
+    * StartsWith) — no Spark job; execution is the ordinary
+    * [[executePlan]] OR/WAND walk, so the whole query costs the same as
+    * an OR of the matched terms. */
   def prefixTopK(spark: SparkSession, root: String, prefixRaw: String,
                  k: Int = 10, scopes: Seq[String] = Nil,
                  pinned: Option[Manifest] = None,
                  filter: QueryFilter = QueryFilter.Empty): Vector[SearchHit] = {
-    import spark.implicits._
     val m = pinned.getOrElse(pinnedManifest(root))
     val pre = Analyzer.foldPrefix(prefixRaw)
     if (pre.isEmpty) return Vector.empty
     memoized(root,
       QueryKey(Vector(pre), "PREFIX", k, scopes, m.snapshotId, filter.cacheKey)) {
-      val found = termStatsFor(spark, root, m)
-        .filter($"term".startsWith(pre))
-        .select($"term", $"df", $"maxTf")
-        .collect().toVector
-        .map(r => TermStats(r.getString(0), r.getLong(1), r.getInt(2)))
+      val found = prefixExpansion(TermDictionary.of(spark, root, m), pre)
       if (found.size > MaxPrefixExpansions)
         throw new IllegalArgumentException(
           s"prefix '$pre*' expands to ${found.size} dictionary terms " +
@@ -1196,6 +1195,12 @@ object SearchEngine {
       expansionTopK(spark, root, m, found, k, scopes, filter)
     }
   }
+
+  /** [[prefixTopK]]'s expansion: the terms starting with the folded
+    * prefix. */
+  private[query] def prefixExpansion(dict: TermDictionary,
+                                     pre: String): Vector[TermStats] =
+    dict.scan(pre)(_ => true)
 
   /** Lucene FuzzyQuery hard limit: edit distances above 2 are useless for
     * typo tolerance and blow up the expansion, so Lucene refuses them —
@@ -1211,13 +1216,12 @@ object SearchEngine {
     * Parity and divergence, stated explicitly:
     *  - `maxEdits` ∈ [0, [[MaxFuzzyEdits]]] like Lucene; 0 = exact term;
     *  - `prefixLength` is Lucene's prefixLength (first N pattern chars
-    *    must match exactly). At sandbox scale it merely narrows the probe;
-    *    at a 10^9-term dictionary it is the SCALE PATH — the probe gains a
-    *    pushable StringStartsWith over term_stats (the [[prefixTopK]]
-    *    shape) instead of scanning the whole dictionary. Lucene walks a
-    *    Levenshtein automaton over its FST term dict; the columnar analog
-    *    of that automaton's prefix cut is the pushed startsWith plus the
-    *    |len(t) − len(q)| ≤ maxEdits length band below;
+    *    must match exactly): it narrows the dictionary scan to the
+    *    prefix's range (the [[prefixTopK]] shape) instead of the whole
+    *    in-memory dictionary. Lucene walks a Levenshtein automaton over
+    *    its FST term dict; the analog of that automaton's prefix cut is
+    *    the range scan plus the |len(t) − len(q)| ≤ maxEdits length band
+    *    below;
     *  - scoring is plain BM25 over the expansion with true per-term dfs
     *    (self-consistent with [[prefixTopK]] and oracle-expressible in
     *    SQL); Lucene additionally boosts each expanded term by
@@ -1229,7 +1233,6 @@ object SearchEngine {
                 scopes: Seq[String] = Nil,
                 pinned: Option[Manifest] = None,
                 filter: QueryFilter = QueryFilter.Empty): Vector[SearchHit] = {
-    import spark.implicits._
     require(maxEdits >= 0 && maxEdits <= MaxFuzzyEdits,
       s"maxEdits must be in [0, $MaxFuzzyEdits] (Lucene FuzzyQuery limit), " +
       s"got $maxEdits")
@@ -1240,23 +1243,8 @@ object SearchEngine {
     memoized(root,
       QueryKey(Vector(q), s"FUZZY:$maxEdits:$prefixLength", k, scopes,
         m.snapshotId, filter.cacheKey)) {
-      // probe order: the cheap necessary conditions first (length band,
-      // optional exact-prefix cut), the codegen'd levenshtein builtin
-      // last — all over the tiny term_stats table, never the dictionary.
-      // CODE-POINT length on both sides: Spark's length()/levenshtein()
-      // count code points, so the band must too or an astral-plane char
-      // in the pattern would shift it by one
-      val qCp = q.codePointCount(0, q.length)
-      val banded = termStatsFor(spark, root, m)
-        .filter(length($"term").between(qCp - maxEdits, qCp + maxEdits))
-      val cut =
-        if (prefixLength > 0) banded.filter($"term".startsWith(q.take(prefixLength)))
-        else banded
-      val found = cut
-        .filter(levenshtein($"term", lit(q)) <= maxEdits)
-        .select($"term", $"df", $"maxTf")
-        .collect().toVector
-        .map(r => TermStats(r.getString(0), r.getLong(1), r.getInt(2)))
+      val found = fuzzyExpansion(TermDictionary.of(spark, root, m), q,
+        maxEdits, prefixLength)
       if (found.size > MaxPrefixExpansions)
         throw new IllegalArgumentException(
           s"fuzzy '$q'~$maxEdits expands to ${found.size} dictionary terms " +
@@ -1266,17 +1254,36 @@ object SearchEngine {
     }
   }
 
+  /** [[fuzzyTopK]]'s expansion. Probe order: the optional exact-prefix
+    * cut (a dictionary range), the cheap length band, then Spark's own
+    * levenshtein (UTF8String.levenshteinDistance, what the builtin
+    * evaluates). CODE-POINT length on both sides: Spark's length() and
+    * levenshtein() count code points, so the band must too or an
+    * astral-plane char would shift it by one. */
+  private[query] def fuzzyExpansion(dict: TermDictionary, q: String,
+                                    maxEdits: Int,
+                                    prefixLength: Int): Vector[TermStats] = {
+    val qCp = q.codePointCount(0, q.length)
+    val qU = UTF8String.fromString(q)
+    dict.scan(if (prefixLength > 0) q.take(prefixLength) else "") { t =>
+      val n = t.numChars
+      n >= qCp - maxEdits && n <= qCp + maxEdits &&
+        t.levenshteinDistance(qU) <= maxEdits
+    }
+  }
+
   /** Wildcard top-k (Lucene WildcardQuery with a scoring-BooleanQuery
     * rewrite): `*` matches any character sequence, `?` exactly one —
     * metacharacters exist only in the pattern (dictionary tokens are
     * letters/digits by construction, so nothing needs escaping). The
     * folded — never stemmed — pattern expands against the snapshot's
-    * dictionary via Spark's codegen'd LIKE (`*`→`%`, `?`→`_`), behind a
-    * pushable StringStartsWith on the literal prefix before the first
-    * metacharacter — Lucene's own prefix cut on its FST walk. A
-    * LEADING-wildcard pattern has no such cut and scans the whole (tiny,
-    * dictionary-sized) term_stats table — the same caveat Lucene
-    * documents for leading wildcards. No stop cap; a pattern without
+    * in-memory dictionary with Spark's LIKE semantics (`*`→`%`, `?`→`_`,
+    * compiled by `StringUtils.escapeLikeRegex` exactly as Catalyst's
+    * `Like` does), over the dictionary range of the literal prefix before
+    * the first metacharacter — Lucene's own prefix cut on its FST walk. A
+    * LEADING-wildcard pattern has no such cut and scans the whole
+    * dictionary — the same caveat Lucene documents for leading
+    * wildcards. No stop cap; a pattern without
     * metacharacters is an exact term lookup; more than
     * [[MaxPrefixExpansions]] matches throws (TooManyClauses) — which also
     * catches the all-metacharacter pattern `*`. */
@@ -1284,22 +1291,12 @@ object SearchEngine {
                    k: Int = 10, scopes: Seq[String] = Nil,
                    pinned: Option[Manifest] = None,
                    filter: QueryFilter = QueryFilter.Empty): Vector[SearchHit] = {
-    import spark.implicits._
     val m = pinned.getOrElse(pinnedManifest(root))
     val pat = Analyzer.foldWildcard(patternRaw)
     if (pat.isEmpty) return Vector.empty
     memoized(root,
       QueryKey(Vector(pat), "WILDCARD", k, scopes, m.snapshotId, filter.cacheKey)) {
-      val litPrefix = pat.takeWhile(c => c != '*' && c != '?')
-      val like = pat.replace('*', '%').replace('?', '_')
-      val base = termStatsFor(spark, root, m)
-      val cut =
-        if (litPrefix.nonEmpty) base.filter($"term".startsWith(litPrefix))
-        else base
-      val found = cut.filter($"term".like(like))
-        .select($"term", $"df", $"maxTf")
-        .collect().toVector
-        .map(r => TermStats(r.getString(0), r.getLong(1), r.getInt(2)))
+      val found = wildcardExpansion(TermDictionary.of(spark, root, m), pat)
       if (found.size > MaxPrefixExpansions)
         throw new IllegalArgumentException(
           s"wildcard '$pat' expands to ${found.size} dictionary terms " +
@@ -1307,6 +1304,16 @@ object SearchEngine {
           "disjunction; narrow the pattern")
       expansionTopK(spark, root, m, found, k, scopes, filter)
     }
+  }
+
+  /** [[wildcardTopK]]'s expansion: Catalyst's LIKE regex over the range
+    * of the literal prefix. */
+  private[query] def wildcardExpansion(dict: TermDictionary,
+                                       pat: String): Vector[TermStats] = {
+    val like = java.util.regex.Pattern.compile(StringUtils.escapeLikeRegex(
+      pat.replace('*', '%').replace('?', '_'), '\\'))
+    dict.scan(pat.takeWhile(c => c != '*' && c != '?'))(t =>
+      like.matcher(t.toString).matches())
   }
 
   /** Boolean MUST + MUST_NOT top-k (Lucene BooleanQuery with MUST and
@@ -2500,8 +2507,6 @@ object SearchEngine {
   // table in executor memory — queries then scan cache, not parquet.
   private val cachedPostings =
     scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private val cachedTermStats =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
   // the snapshot the pinned frames were built from: a query pinned to a
   // DIFFERENT snapshot (time travel, or a racing manifest flip) must
   // bypass the cache, not silently read another snapshot's data
@@ -2645,18 +2650,18 @@ object SearchEngine {
   private val cachedPostingsAligned =
     scala.collection.concurrent.TrieMap.empty[String, Boolean]
 
-  /** Pin the CURRENT snapshot's postings + dictionary in executor memory
-    * for low-latency serving (reference analog: MySQL buffer pool
-    * residency); prefers the shard-aligned scan so the cached
+  /** Pin the CURRENT snapshot's postings in executor memory (and load
+    * its dictionary into the driver memo) for low-latency serving
+    * (reference analog: MySQL buffer pool residency); prefers the
+    * shard-aligned scan so the cached
     * partitioning already groups whole shards and queries run
     * shuffle-free. Re-invoking after
     * an external writer committed a newer snapshot REFRESHES the pins
-    * (drops the stale frames, rebuilds, restamps) — a getOrElseUpdate
+    * (drops the stale frame, rebuilds, restamps) — a getOrElseUpdate
     * would silently keep serving-bypassing stale entries forever. The
-    * snapshot stamp is written only after BOTH frames are built from the
-    * same pinned manifest, so an interleaved disable can never leave one
-    * stale frame passing cacheMatches under a newer stamp. */
-  /** Pin the snapshot's postings + term stats in executor memory.
+    * snapshot stamp is written only after the frame is built from the
+    * pinned manifest, so an interleaved disable can never leave a stale
+    * frame passing cacheMatches under a newer stamp.
     *
     * `positions = false` (default) PRUNES the position streams from the
     * pinned frame on a positional index (r6 review): the `positions`/
@@ -2670,12 +2675,11 @@ object SearchEngine {
   def enableServingCache(spark: SparkSession, root: String,
                          positions: Boolean = false): Unit = {
     val m = pinnedManifest(root)
-    if (cacheMatches(root, m) && cachedTermStats.contains(root) &&
+    if (cacheMatches(root, m) &&
         cachedPostings.get(root).exists(df =>
           !m.positions || positions == df.columns.contains("positions")))
       return // already pinned at m in the requested shape
     cachedPostings.remove(root).foreach(_.unpersist())
-    cachedTermStats.remove(root).foreach(_.unpersist())
     cachedPostingsAligned.remove(root)
     cachedSnapshot.remove(root)
     val (base0, aligned) = alignedPostingsFor(spark, root, m) match {
@@ -2687,11 +2691,9 @@ object SearchEngine {
       else base0
     val p = base.cache()
     p.count() // materialize
-    val ts = IndexSnapshot.termStats(spark, root, m).cache()
-    ts.count()
+    TermDictionary.of(spark, root, m)
     cachedPostings.put(root, p)
     cachedPostingsAligned.put(root, aligned)
-    cachedTermStats.put(root, ts)
     cachedSnapshot.put(root, m.snapshotId) // stamp LAST
     ()
   }
@@ -2700,14 +2702,15 @@ object SearchEngine {
     cachedPostings.remove(root).foreach(_.unpersist())
     cachedPostingsAligned.remove(root)
     cachedSnapshot.remove(root)
-    cachedTermStats.remove(root).foreach(_.unpersist())
-    // maintenance calls this before rewriting — drop aligned-scan plans
-    // and the scoped-query memos for the root too (their snapshot is
+    // maintenance calls this before rewriting — drop aligned-scan plans,
+    // the root's dictionaries (a root rebuilt out-of-band may reuse a
+    // dictionary key) and the scoped-query memos too (their snapshot is
     // about to be superseded), and flush memoized results (stale hits
     // would otherwise survive the rewrite; the LRU itself stays enabled
     // for the serving process). The manifest-resolution memo stays: it
     // keys by (root, version) and committed manifests are immutable.
     alignedPostings.keys.filter(_._1 == root).foreach(alignedPostings.remove)
+    TermDictionary.invalidate(root)
     scopeSegCache.synchronized {
       scopeSegCache.keySet.removeIf(_._1 == root)
     }
@@ -2724,11 +2727,6 @@ object SearchEngine {
                           m: Manifest): DataFrame =
     cachedPostings.get(root).filter(_ => cacheMatches(root, m))
       .getOrElse(IndexSnapshot.postings(spark, root, m))
-
-  private[query] def termStatsFor(spark: SparkSession, root: String,
-                                  m: Manifest): DataFrame =
-    cachedTermStats.get(root).filter(_ => cacheMatches(root, m))
-      .getOrElse(IndexSnapshot.termStats(spark, root, m))
 
   def statsOf(spark: SparkSession, root: String): CorpusStats = {
     val m = pinnedManifest(root)

@@ -12,10 +12,13 @@ import graft.query.SearchEngine
 /** Standalone query-latency probe (Bench section 3 in isolation): builds
   * the same 20k-conv index the round bench uses and reports true-cold
   * (first pass), warm-uncached (steady-state parquet scan) and
-  * serving-cache p50/p95 over the fixture query mix. Use with
-  * GRAFT_QUERY_TELEMETRY=1 to get the per-query phase breakdown — the
-  * tool that makes a cold-latency regression diagnosable without running
-  * the full bench (VERDICT r02 item 10).
+  * serving-cache p50/p95 over the fixture query mix, then the SHOULD
+  * walk against the equivalent plain OR on the hottest Zipf terms
+  * (best-of-`reps` warm seconds; VERDICT r7 item 1 done-criterion:
+  * hot-term SHOULD at <= ~1.2x the equivalent OR top-k) together with
+  * the bit-equality check of the `minMatch = 1 == OR` dispatch law.
+  * Per-phase query timings come from the traced perfbench run
+  * (`query.exec_s`, `query.wand.walk_s`).
   *
   *   sbt "runMain graft.cli.BenchQuery [nConvs] [reps]"
   */
@@ -57,13 +60,40 @@ object BenchQuery {
     // measured after a warm pass over the same queries)
     val cold = onePass().sorted
     val warmUncached = measure() // steady-state, parquet scan per query
+
+    def best(f: => Unit): Double = {
+      f // warm
+      (1 to reps).map { _ =>
+        val t0 = System.nanoTime()
+        f
+        (System.nanoTime() - t0) / 1e9
+      }.min
+    }
+    val hot2 = "w0000 w0001" // the two hottest Zipf terms
+    val hot3 = "w0000 w0001 w0002"
+    val or2 = best { SearchEngine.query(s, root, hot2, "OR", 10); () }
+    val should2m1 = best { SearchEngine.queryShould(s, root, hot2, 1, 10); () }
+    val or3 = best { SearchEngine.query(s, root, hot3, "OR", 10); () }
+    val should3m1 = best { SearchEngine.queryShould(s, root, hot3, 1, 10); () }
+    val should3m2 = best { SearchEngine.queryShould(s, root, hot3, 2, 10); () }
+    val lawOk = SearchEngine.queryShould(s, root, hot3, 1, 10) ==
+      SearchEngine.query(s, root, hot3, "OR", 10)
+
     SearchEngine.enableServingCache(s, root)
     queries.foreach { case (q, m, k) => SearchEngine.query(s, root, q, m, k) }
     val cached = measure()
     SearchEngine.disableServingCache(root)
     def pct(xs: Seq[Double], p: Double): Double =
       xs(math.min(xs.size - 1, (xs.size * p).toInt))
-    println(s"""{"bench_query":{"convs":$nConvs,"cold_p50":${fmt(pct(cold, 0.5))},"cold_p95":${fmt(pct(cold, 0.95))},"warm_uncached_p50":${fmt(pct(warmUncached, 0.5))},"warm_uncached_p95":${fmt(pct(warmUncached, 0.95))},"cached_p50":${fmt(pct(cached, 0.5))},"cached_p95":${fmt(pct(cached, 0.95))}}}""")
+    println(s"""{"bench_query":{"convs":$nConvs,"cold_p50":${fmt(pct(cold, 0.5))},"cold_p95":${fmt(pct(cold, 0.95))},"warm_uncached_p50":${fmt(pct(warmUncached, 0.5))},"warm_uncached_p95":${fmt(pct(warmUncached, 0.95))},"cached_p50":${fmt(pct(cached, 0.5))},"cached_p95":${fmt(pct(cached, 0.95))},""" +
+      s""""or2_sec":${fmt(or2)},"should2_m1_sec":${fmt(should2m1)},""" +
+      s""""or3_sec":${fmt(or3)},"should3_m1_sec":${fmt(should3m1)},""" +
+      s""""should3_m2_sec":${fmt(should3m2)},""" +
+      s""""ratio_m1_vs_or":${fmt(should3m1 / or3)},""" +
+      s""""ratio_m2_vs_or":${fmt(should3m2 / or3)},""" +
+      s""""law_minmatch1_eq_or":$lawOk}}""")
+    try graft.Bench.deleteRecursively(root)
+    catch { case _: Exception => () }
     s.stop()
   }
 }

@@ -77,9 +77,10 @@ object BuildIndex {
 }
 
 /** Query a built index.
-  * Usage: Query <indexRoot> <queryText> [--mode AND|OR|PHRASE|NEAR|PREFIX|FUZZY|WILDCARD]
+  * Usage: Query <indexRoot> <queryText> [--mode AND|OR|SHOULD|PHRASE|NEAR|PREFIX|FUZZY|WILDCARD]
   *        [--k N] [--slop N] [--edits N] [--prefix-len N] [--naive]
   *        [--scopes p1,p2] [--snapshot N]
+  * Any other --mode is refused with the usage string.
   * PHRASE mode treats <queryText> as an exact phrase over the analyzed
   * token stream (SearchEngine.phraseTopK); NEAR matches all terms within
   * a window of --slop+1 consecutive positions (default slop 2,
@@ -142,6 +143,8 @@ object Query {
       "[--k N] [--slop N] [--ordered] [--edits N] [--prefix-len N] [--min-match N] " +
       "[--not <terms>] [--should <terms>] [--role X] [--tool Y] [--from ts] [--to ts] " +
       "[--naive] [--conv <prefix>] [--snapshot N] | Query <root> '<lucene query>' --lucene"
+    require(Set("AND", "OR", "SHOULD", "PHRASE", "NEAR", "PREFIX", "FUZZY",
+      "WILDCARD").contains(mode), s"unknown --mode '$mode' — " + usage)
     def numOpt(name: String): Option[Long] = opt(name).map { s =>
       s.toLongOption.getOrElse(sys.error(
         s"$name expects an integer, got '$s' — " + usage))

@@ -30,8 +30,9 @@ import graft.model.{QueryFilter, SearchHit}
   *           | term ('^' boost)?                   — boost: Lucene term^b
   *
   * Dispatch rules (all Lucene parity unless noted):
-  *   - only SHOULD clauses → at least one must match ([[SearchEngine
-  *     .queryShould]] via [[SearchEngine.queryBool]]);
+  *   - only SHOULD clauses → at least one must match
+  *     ([[SearchEngine.queryBool]] with no MUST clause is the
+  *     [[SearchEngine.queryShould]] query);
   *   - MUST present → SHOULD clauses only boost (minimumShouldMatch 0;
   *     raise via the `minShouldMatch` parameter);
   *   - a bare quoted phrase (no other TEXT clauses; filters compose
@@ -47,9 +48,9 @@ import graft.model.{QueryFilter, SearchHit}
   *     otherwise silently split `foo:bar` into two text terms — typo
   *     protection beats silent broadening);
   *   - a phrase WITH other text clauses → [[SearchEngine
-  *     .queryBoolPhrase]], the composed executor (r7: the phrase is a
-  *     required positional clause next to MUST/SHOULD/MUST_NOT;
-  *     unscoped only — composed + scopes refuses);
+  *     .queryBoolPhrase]] (r7: the phrase is a required positional
+  *     clause next to MUST/SHOULD/MUST_NOT, planned and executed like
+  *     every other query; unscoped only — composed + scopes refuses);
   *   - duplicate role:/tool: filters and multiple ts: ranges are
   *     REFUSED (a conjunction of two different role equalities is
   *     always empty — another typo trap);

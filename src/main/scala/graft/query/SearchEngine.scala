@@ -1,12 +1,13 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.catalyst.util.StringUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.analysis.Analyzer
-import graft.index.{IndexBuilder, IndexManifest, IndexSnapshot, Manifest, TermDictionary}
+import graft.index.{IndexBuilder, IndexManifest, IndexSnapshot, Manifest, PostingCodec,
+  TermDictionary}
 import graft.model.{CorpusStats, QueryFilter, QuerySpec, SearchHit, TermStats}
 
 /** Query engine over a built index (SURVEY.md §3.1 Spark lifecycle, §7.5).
@@ -25,11 +26,34 @@ import graft.model.{CorpusStats, QueryFilter, QuerySpec, SearchHit, TermStats}
   *    resident dictionary ([[TermDictionary]], loaded once per term_stats
   *    generation — no Spark job per query) → partition-pruned posting
   *    scan (parquet row-group skipping on the sorted `term` column) →
-  *    shard-local AND-intersection / WAND in `mapPartitions` (zero
-  *    per-query shuffle) → per-shard top-k → driver k-way merge. Per-query
-  *    work is O(postings of the query terms), network is O(shards × k);
-  *    the dictionary must fit in driver memory, as the broadcast join of
+  *    shard-local walk in `mapPartitions` (zero per-query shuffle) →
+  *    per-shard top-k → driver k-way merge. Per-query work is
+  *    O(postings of the query terms), network is O(shards × k); the
+  *    dictionary must fit in driver memory, as the broadcast join of
   *    `queryNaive` already requires.
+  *
+  * Every compressed-path entry point — AND/OR, MUST_NOT, SHOULD, the
+  * combined BooleanQuery, phrase/NEAR (alone or as a clause) and the
+  * prefix/fuzzy/wildcard expansions — is one planner over one executor:
+  *
+  *  1. [[clauseQuery]] resolves clause overlaps (Lucene clause algebra)
+  *     and [[fanOut]] runs the plan over the whole corpus or once per
+  *     scope, each with its own (statistics, docId ranges, df lookup);
+  *  2. [[execute]] runs one [[Clauses]] value: MUST terms (scored,
+  *     intersected), SHOULD terms (scored, `minMatch` of them required),
+  *     MUST_NOT terms (probed), FILTER field terms (weightless) and an
+  *     optional positional [[Proximity]] predicate over the MUST slots;
+  *  3. [[scanShards]] is the one posting-scan skeleton: pruned scan →
+  *     per-shard decode → per-shard body → collect. The top-k body is
+  *     the conjunctive walk ([[Wand.andAllWith]] with a per-candidate
+  *     gate) when MUST is non-empty, else the disjunctive dispatch
+  *     ([[Wand.orTopKSegments]] / [[Wand.shouldTopKSegments]]);
+  *     [[rescanVerify]] serves proximity on a positions-free index.
+  *
+  * The dedicated modes are degenerate inputs of that executor, exactly:
+  * AND is MUST-only, OR is SHOULD with minMatch 1, a NOT query has no
+  * SHOULD slots and a plain phrase has no term clauses — an absent SHOULD
+  * slot adds +0.0 to the canonical fold, so their scores stay bit-equal.
   *
   * Query-time semantics carried over from the reference:
   *  - terms analyzed with the SAME analyzer as the build
@@ -90,14 +114,28 @@ object SearchEngine {
             convPrefix: Option[String] = None,
             filter: QueryFilter = QueryFilter.Empty,
             after: Option[SearchHit] = None): Vector[SearchHit] =
-    convPrefix match {
-      case Some(pre) =>
-        require(after.isEmpty, ScopedAfterError)
-        queryScoped(spark, root, queryText, mode, k, Seq(pre), filter)
-      case None =>
-        queryResolved(spark, root, pinnedManifest(root), queryText, mode, k,
-          filter, after)
-    }
+    termQuery(spark, root, pinnedManifest(root), queryText, mode, k,
+      convPrefix.toSeq, filter, after)
+
+  /** `mode` is AND or OR on every mode-taking entry point — anything else
+    * is refused, never run as a silent OR. */
+  private def requireMode(mode: String): Unit =
+    require(mode == "AND" || mode == "OR", s"mode must be AND or OR, got '$mode'")
+
+  /** AND is the MUST-only [[clauseQuery]]; OR is SHOULD with minMatch 1
+    * (the spec-pinned `queryShould(q, 1) == OR` law). */
+  private def termQuery(spark: SparkSession, root: String, m: Manifest,
+                        queryText: String, mode: String, k: Int,
+                        scopes: Seq[String], filter: QueryFilter,
+                        after: Option[SearchHit] = None): Vector[SearchHit] = {
+    requireMode(mode)
+    val terms = Analyzer.analyzeQueryFor(m.analyzerVersion, queryText)
+    if (mode == "AND")
+      clauseQuery(spark, root, m, terms, Vector.empty, Vector.empty, 0, k,
+        scopes, filter, after)
+    else clauseQuery(spark, root, m, Vector.empty, terms, Vector.empty, 1, k,
+      scopes, filter, after)
+  }
 
   /** search_after (r7) is single-walk only: a multi-scope union keeps
     * each doc's BEST-instance score, and a per-scope after-cursor walk
@@ -154,17 +192,6 @@ object SearchEngine {
     (terms, ts)
   }
 
-  /** Combine optional scope ranges with the filter's optional ts ranges
-    * (intersection when both present). None = unconstrained. */
-  private def combineRanges(scope: Option[Seq[(Long, Long)]],
-                            ts: Option[Seq[(Long, Long)]])
-      : Option[Seq[(Long, Long)]] = (scope, ts) match {
-    case (None, None) => None
-    case (Some(a), None) => Some(a)
-    case (None, Some(b)) => Some(b)
-    case (Some(a), Some(b)) => Some(intersectRanges(a, b))
-  }
-
   /** Time travel: query a SPECIFIC committed snapshot (must still be
     * within the retention window — see IndexSnapshot.expireSnapshots;
     * expired snapshots' manifest files are deleted with their data, so
@@ -187,6 +214,7 @@ object SearchEngine {
               k: Int = 10, scopes: Seq[String] = Nil,
               filter: QueryFilter = QueryFilter.Empty,
               after: Option[SearchHit] = None): Vector[SearchHit] = {
+    requireMode(mode)
     require(after.isEmpty || scopes.isEmpty, ScopedAfterError)
     val retained = IndexManifest.versions(root)
     require(retained.contains(snapshotId),
@@ -195,20 +223,10 @@ object SearchEngine {
     withExpiryDiagnosis(root, snapshotId) {
       // the manifest parse itself can lose the race with expiry (cold
       // cache miss after versions() listed the snapshot) — keep it
-      // inside the diagnosis wrapper so it fails loudly, not raw
+      // inside the diagnosis wrapper so it fails loudly, not raw; scope,
+      // segment and df memos key by snapshot id
       val m = IndexManifest.readVersionCached(root, snapshotId)
-      if (scopes.isEmpty)
-        queryResolved(spark, root, m, queryText, mode, k, filter, after)
-      else {
-        // scoped time travel: the scoped path already pins one manifest
-        // end-to-end, and scope/segment/df memos key by snapshot id
-        val terms = Analyzer.analyzeQueryFor(m.analyzerVersion, queryText)
-        if (terms.isEmpty) Vector.empty
-        else memoized(root,
-          QueryKey(terms, mode, k, scopes, m.snapshotId, filter.cacheKey)) {
-          queryScopedUncached(spark, root, m, terms, mode, k, scopes, filter)
-        }
-      }
+      termQuery(spark, root, m, queryText, mode, k, scopes, filter, after)
     }
   }
 
@@ -232,33 +250,11 @@ object SearchEngine {
         else throw e
     }
 
-  /** Unscoped query against ONE pinned snapshot (see [[pinnedManifest]]). */
-  private def queryResolved(spark: SparkSession, root: String, m: Manifest,
-                            queryText: String, mode: String, k: Int,
-                            filter: QueryFilter = QueryFilter.Empty,
-                            after: Option[SearchHit] = None): Vector[SearchHit] = {
-    val stats = CorpusStats(m.nDocs, m.avgdl, m.analyzerVersion)
-    val terms = Analyzer.analyzeQueryFor(stats.analyzerVersion, queryText)
-    memoized(root,
-      QueryKey(terms, mode, k, Nil, m.snapshotId, filter.cacheKey,
-        afterKey(after))) {
-      val (fterms, tsRanges) = resolveFilter(spark, root, m, filter)
-      val spec = QuerySpec(terms, mode, k)
-      val p = plan(spark, root, spec, stats, pinned = Some(m))
-      // terms absent from the dictionary are silently DROPPED and the
-      // rest searched (reference SearchServiceImpl.java:145-148
-      // filter(Objects::nonNull)); empty only when nothing survives
-      if (p.terms.isEmpty) Vector.empty
-      else executePlan(spark, root, p, stats,
-        combineRanges(None, tsRanges), Some(m), fterms, after)
-    }
-  }
-
   /** Multi-scope search (reference multi-site: per-site results computed
     * with per-site statistics, then unioned — SearchServiceImpl.java:
     * 127-162, O5). Scopes are conv-id prefixes and expected disjoint
     * (like sites); a doc reachable through several overlapping scopes
-    * keeps its highest-scoring instance. Per scope:
+    * keeps its highest-scoring instance. Per scope ([[fanOut]]):
     *
     *  1. one pruned docs agg resolves (docId range, N, avgdl);
     *  2. one pruned posting scan counts per-term df INSIDE the range
@@ -269,71 +265,73 @@ object SearchEngine {
   def queryScoped(spark: SparkSession, root: String, queryText: String,
                   mode: String, k: Int, scopes: Seq[String],
                   filter: QueryFilter = QueryFilter.Empty): Vector[SearchHit] = {
-    val m = pinnedManifest(root)
-    val terms = Analyzer.analyzeQueryFor(m.analyzerVersion, queryText)
-    if (terms.isEmpty || scopes.isEmpty) return Vector.empty
-    memoized(root,
-      QueryKey(terms, mode, k, scopes, m.snapshotId, filter.cacheKey)) {
-      queryScopedUncached(spark, root, m, terms, mode, k, scopes, filter)
-    }
+    requireMode(mode)
+    if (scopes.isEmpty) Vector.empty
+    else termQuery(spark, root, pinnedManifest(root), queryText, mode, k,
+      scopes, filter)
   }
 
-  private def queryScopedUncached(spark: SparkSession, root: String,
-                                  m: Manifest,
-                                  terms: Vector[String], mode: String, k: Int,
-                                  scopes: Seq[String],
-                                  filter: QueryFilter = QueryFilter.Empty): Vector[SearchHit] = {
-    // filters compose with scopes: per-scope STATISTICS stay those of the
-    // whole scope (filters never re-weigh — Lucene FILTER semantics), the
-    // walk runs over scope ∩ ts segments, field cursors probe in-walk
-    val (fterms, tsRanges) = resolveFilter(spark, root, m, filter)
-    val all = scopes.flatMap { pre =>
-      scopedKeptPlan(spark, root, m, terms, pre, mode, k) match {
-        case None => Vector.empty
-        case Some((p, stats, ranges)) =>
-          // ALL segments in ONE scan: the shard-local WAND walks the
-          // ascending segment list with one cursor pass and one heap —
-          // a scope fragmented by out-of-order appends costs one Spark
-          // job, not one per segment
-          executePlan(spark, root, p, stats,
-            combineRanges(Some(ranges), tsRanges), Some(m), fterms)
+  /** One planning target: the whole corpus or one scope, with its
+    * statistics, its docId ranges (None = unconstrained, already
+    * intersected with the filter's ts ranges) and its df lookup. The
+    * lookup omits terms unknown to the target — absent from the
+    * dictionary, or with scoped df 0. */
+  private final case class Target(stats: CorpusStats,
+                                  ranges: Option[Seq[(Long, Long)]],
+                                  dfOf: Seq[String] => Map[String, Long])
+
+  /** THE scope fan-out behind every query: `body` runs once over the
+    * whole corpus (dictionary dfs) or once per scope (scoped dfs,
+    * per-scope N/avgdl/segments), and per-scope answers union keeping
+    * each doc's best-scoring instance, global (score DESC, docId ASC)
+    * order. Filters compose with scopes: per-scope STATISTICS stay those
+    * of the whole scope (filters never re-weigh — Lucene FILTER
+    * semantics); the walk runs over scope ∩ ts segments. Each caller
+    * applies its own clause rule to the lookup ([[capped]] for AND/SHOULD
+    * terms, exact for proximity slots, df > 0 for expansions). */
+  private def fanOut(spark: SparkSession, root: String, m: Manifest,
+                     scopes: Seq[String],
+                     tsRanges: Option[Seq[(Long, Long)]], k: Int)
+                    (body: Target => Vector[SearchHit]): Vector[SearchHit] =
+    if (scopes.isEmpty) {
+      val dict = TermDictionary.of(spark, root, m)
+      body(Target(CorpusStats(m.nDocs, m.avgdl, m.analyzerVersion), tsRanges,
+        terms => terms.flatMap(t => dict.get(t).map(t -> _.df)).toMap))
+    } else {
+      val all = scopes.flatMap { pre =>
+        val segs = scopeSegments(spark, root, m, pre)
+        if (segs.isEmpty) Vector.empty
+        else {
+          val n = segs.map(_.n).sum
+          val ranges = segs.map(s => (s.lo, s.hi))
+          // ALL segments in ONE scan: the shard-local walk takes the
+          // ascending segment list with one cursor pass and one heap — a
+          // scope fragmented by out-of-order appends costs one Spark job,
+          // not one per segment
+          body(Target(CorpusStats(n, segs.map(_.sumDl).sum.toDouble / n,
+              m.analyzerVersion),
+            Some(tsRanges.fold[Seq[(Long, Long)]](ranges)(intersectRanges(ranges, _))),
+            terms => scopedTermDf(spark, root, m, pre, terms, ranges)
+              .filter(_._2 > 0)))
+        }
       }
+      unionBest(all, k)
     }
-    unionBest(all, k)
-  }
-
-  /** Per-scope AND/OR planning — segments, per-scope stats, scoped dfs
-    * with the df>0 drop, the per-scope stop cap and canonical (df, term)
-    * order. ONE definition shared by [[queryScopedUncached]] and
-    * [[queryNot]]'s scoped branch (r6 review: a drifting copy). None =
-    * empty scope or no surviving term. */
-  private def scopedKeptPlan(spark: SparkSession, root: String, m: Manifest,
-                             terms: Vector[String], pre: String,
-                             mode: String, k: Int)
-      : Option[(Plan, CorpusStats, Seq[(Long, Long)])] = {
-    val segs = scopeSegments(spark, root, m, pre)
-    if (segs.isEmpty) None
-    else {
-      val n = segs.map(_.n).sum
-      val stats = CorpusStats(n, segs.map(_.sumDl).sum.toDouble / n,
-        m.analyzerVersion)
-      val ranges = segs.map(s => (s.lo, s.hi))
-      val dfs = scopedTermDf(spark, root, m, pre, terms, ranges)
-      val kept = terms
-        .flatMap(t => dfs.get(t).filter(_ > 0).map(df => (t, df)))
-        .filter { case (_, df) => df <= StopTermCap * n }
-        .sortBy { case (t, df) => (df, t) }
-        .map { case (t, df) => TermStats(t, df, 0) }
-      if (kept.isEmpty) None
-      else Some((Plan(kept.toVector, Vector.empty, mode, k), stats, ranges))
-    }
-  }
 
   /** Multi-scope union: overlapping scopes keep each doc's best-scoring
     * instance, global (score DESC, docId ASC) order. */
   private def unionBest(all: Seq[SearchHit], k: Int): Vector[SearchHit] =
     all.groupBy(_.docId).values.map(_.maxBy(_.score)).toVector
       .sortBy(h => (-h.score, h.docId)).take(k)
+
+  /** The AND/SHOULD clause rule: terms unknown to the target drop
+    * (reference SearchServiceImpl.java:145-148 filter(Objects::nonNull)),
+    * terms above the stop cap df <= 0.9·N drop; survivors in canonical
+    * (df asc, term asc) order. */
+  private def capped(terms: Seq[String], dfs: Map[String, Long],
+                     nDocs: Long): Vector[TermStats] =
+    terms.flatMap(t => dfs.get(t).filter(_ <= StopTermCap * nDocs)
+      .map(TermStats(t, _, 0))).toVector.sortBy(t => (t.df, t.term))
 
   /** One contiguous docId run of a scope. */
   final case class ScopeSegment(lo: Long, hi: Long, n: Long, sumDl: Long)
@@ -549,52 +547,26 @@ object SearchEngine {
                                   m: Manifest, terms: Seq[String],
                                   segments: Seq[(Long, Long)]): Map[String, Long] = {
     import spark.implicits._
-    val lo = segments.map(_._1).min
-    val hi = segments.map(_._2).max
-    val segs = segments.sorted.toVector
-    val pruned = shardsIntersecting(m, lo, hi) match {
-        case Some(sh) =>
-          postingsFor(spark, root, m).filter($"shard".isin(sh: _*))
-        case None => postingsFor(spark, root, m)
-      }
-    pruned.filter($"term".isin(terms: _*))
-      .select($"term", $"count", $"docIds", $"tfs", $"dls", $"blockFirst",
-        $"docOff", $"tfOff", $"dlOff", $"blockMaxTf", $"blockMinDl")
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val cur = new graft.index.PostingCodec.BlockedCursor(
-            graft.index.PostingCodec.BlockedList(
-              r.getLong(1).toInt, r.getAs[Array[Byte]](2),
-              r.getAs[Array[Byte]](3), r.getAs[Array[Byte]](4),
-              r.getSeq[Long](5).toArray, r.getSeq[Int](6).toArray,
-              r.getSeq[Int](7).toArray, r.getSeq[Int](8).toArray,
-              r.getSeq[Int](9).toArray, r.getSeq[Int](10).toArray))
-          var c = 0L
-          segs.foreach { case (sLo, sHi) =>
-            cur.advanceTo(sLo)
-            while (!cur.exhausted && cur.docId <= sHi) { c += 1; cur.advance() }
-          }
-          (r.getString(0), c)
+    val (segs, shardPrune) = segsAndPrune(m, Some(segments))
+    scanShards(spark, root, m, shardPrune, terms, withPos = false) { (_, chunks) =>
+      chunks.iterator.map { case (t, cs) =>
+        val cur = new Wand.TermCursor(Wand.TermPostings(t, 0L, 0, cs), 1L, 1.0,
+          scored = false)
+        var c = 0L
+        segs.foreach { case (sLo, sHi) =>
+          cur.advanceTo(sLo)
+          while (!cur.exhausted && cur.docId <= sHi) { c += 1; cur.advance() }
         }
+        (t, c)
       }
-      .groupByKey(_._1).mapValues(_._2).reduceGroups(_ + _)
-      .collect().toMap
+    }.collect().groupMapReduce(_._1)(_._2)(_ + _)
   }
-
-  /** Per-query latency telemetry (VERDICT r02 item 10): set
-    * GRAFT_QUERY_TELEMETRY=1 to emit one stderr JSON line per query with
-    * the phase breakdown (plan/scan+wand/merge, shard-local wand time from
-    * an accumulator, path taken) — latency regressions become diagnosable
-    * from the bench artifact alone. */
-  private val telemetry = sys.env.get("GRAFT_QUERY_TELEMETRY").contains("1")
 
   /** Ascending disjoint docId segments scoping a query (one = the common
     * case; several = a scope fragmented by out-of-order appends) + the
     * manifest-range shard-prune transform for the posting scan
     * (partition-column pruning — the scan never lists the other shard
-    * dirs). ONE definition shared by executePlan / positionalVerifyTopK /
-    * phraseCandidates (r6 review: three drifting copies). Empty segs =
-    * empty scope. */
+    * dirs). Empty segs = empty scope. */
   private def segsAndPrune(m: Manifest, ranges: Option[Seq[(Long, Long)]])
       : (Vector[(Long, Long)], DataFrame => DataFrame) = {
     val segs: Vector[(Long, Long)] = ranges match {
@@ -616,8 +588,7 @@ object SearchEngine {
 
   /** The posting-scan projection [[decodeByTerm]] consumes — one
     * definition so the select list and the decode's positional getSeq
-    * indices cannot drift apart (r6 review: three hand-written copies
-    * had already diverged into 13- vs 15-column index lists). */
+    * indices cannot drift apart. */
   private def postingScanColumns(withPos: Boolean): Seq[org.apache.spark.sql.Column] = {
     val base = Seq("shard", "term", "chunk", "count", "docIds", "tfs",
       "dls", "blockFirst", "docOff", "tfOff", "dlOff",
@@ -633,16 +604,15 @@ object SearchEngine {
   private def decodeByTerm(rows: Iterator[org.apache.spark.sql.Row],
                            withPos: Boolean)
       : scala.collection.mutable.LinkedHashMap[(Int, String),
-          scala.collection.mutable.ArrayBuffer[graft.index.PostingCodec.BlockedList]] = {
+          scala.collection.mutable.ArrayBuffer[PostingCodec.BlockedList]] = {
     val byTerm = scala.collection.mutable.LinkedHashMap
       .empty[(Int, String),
-             scala.collection.mutable.ArrayBuffer[graft.index.PostingCodec.BlockedList]]
+             scala.collection.mutable.ArrayBuffer[PostingCodec.BlockedList]]
     rows.foreach { r =>
       val key = (r.getInt(0), r.getString(1))
       byTerm.getOrElseUpdate(key,
-        scala.collection.mutable.ArrayBuffer
-          .empty[graft.index.PostingCodec.BlockedList]) +=
-        graft.index.PostingCodec.BlockedList(
+        scala.collection.mutable.ArrayBuffer.empty[PostingCodec.BlockedList]) +=
+        PostingCodec.BlockedList(
           r.getLong(3).toInt, r.getAs[Array[Byte]](4),
           r.getAs[Array[Byte]](5), r.getAs[Array[Byte]](6),
           r.getSeq[Long](7).toArray, r.getSeq[Int](8).toArray,
@@ -654,153 +624,325 @@ object SearchEngine {
     byTerm
   }
 
-  /** Chunk lists → one [[Wand.TermCursor]] per term present in the shard.
-    * Chunks concatenate in ascending-docId order; blockFirst(0) is the
-    * chunk's first docId — robust even if a shard's rows were encoded by
-    * several tasks. */
-  private def buildCursors(
-      termChunks: scala.collection.Map[(Int, String),
-        scala.collection.mutable.ArrayBuffer[graft.index.PostingCodec.BlockedList]],
-      dfByTerm: Map[String, Long], canonical: Map[String, Int],
-      nDocs: Long, avgdl: Double,
-      boostOf: Map[String, Double] = Map.empty): Seq[Wand.TermCursor] =
-    termChunks.map { case ((_, term), chunks) =>
-      val sorted = chunks
-        .sortBy(c => if (c.blockFirst.isEmpty) Long.MaxValue
-                     else c.blockFirst(0))
-        .toIndexedSeq
-      // typed-field terms (r7) are WEIGHTLESS wherever they appear
-      // (Lucene FILTER clauses): zero score, zero upper bounds. Their df
-      // is the per-shard posting count — the planner has no global df
-      // for them (the dictionary excludes the namespace), and the local
+  /** THE posting-scan skeleton: the pinned snapshot's postings scan
+    * ([[resolvedPostingsScan]]), shard-pruned, filtered to `terms`, then
+    * ONE `mapPartitions` pass that decodes every row ([[decodeByTerm]])
+    * and hands each shard's (term, chunks) lists — chunks in
+    * ascending-docId order, terms in scan order — to `perShard`.
+    *
+    * Per-shard grouping must be COMPLETE inside each task: posting files
+    * are term-sorted, so if a shard's rows split across scan tasks at
+    * row-group boundaries, term-A and term-B chunks land in different
+    * tasks and a walk would silently drop or half-score the shard's hits
+    * (EngineParitySpec split-scan test pins this). The aligned scan reads
+    * one whole shard file per task; other layouts pay a per-query
+    * `repartition($"shard")` (VERDICT r02 item 2). One partition may pack
+    * several whole shards: the (few) keys group, never the rows. */
+  private def scanShards[T: Encoder](spark: SparkSession, root: String,
+                                     m: Manifest,
+                                     shardPrune: DataFrame => DataFrame,
+                                     terms: Seq[String], withPos: Boolean)
+      (perShard: (Int, Seq[(String, IndexedSeq[PostingCodec.BlockedList])]) => Iterator[T])
+      : Dataset[T] = {
+    val (scanFrame, needShuffle) = resolvedPostingsScan(spark, root, m, withPos)
+    val selected = shardPrune(scanFrame).filter(col("term").isin(terms: _*))
+    (if (needShuffle) selected.repartition(col("shard")) else selected)
+      .select(postingScanColumns(withPos): _*)
+      .mapPartitions { rows =>
+        decodeByTerm(rows, withPos).groupBy(_._1._1).iterator.flatMap {
+          case (shard, termChunks) =>
+            perShard(shard, termChunks.toSeq.map { case ((_, t), chunks) =>
+              t -> chunks.sortBy(c => if (c.blockFirst.isEmpty) Long.MaxValue
+                                      else c.blockFirst(0)).toIndexedSeq
+            })
+        }
+      }
+  }
+
+  /** A positional predicate over the MUST slots (phrase / NEAR), with its
+    * token-stream twin for indexes built without positions. `posPred`
+    * reads each DISTINCT term's ascending ordinals, indexed by `slots`
+    * (sorted distinct terms); `seq` and `label` key the result memo. */
+  private final case class Proximity(label: String, seq: Vector[String],
+                                     posPred: Array[Array[Int]] => Boolean,
+                                     verify: Vector[String] => Boolean) {
+    val slots: Vector[String] = seq.distinct.sorted
+  }
+
+  /** Slot of each distinct term (sorted order) and the slot of each
+    * sequence position — repeated terms probe one list at several
+    * offsets. */
+  private def slotsOf(seq: Vector[String]): (Map[String, Int], Array[Int]) = {
+    val slotOf = seq.distinct.sorted.zipWithIndex.toMap
+    (slotOf, seq.map(slotOf).toArray)
+  }
+
+  private def phrase(seq: Vector[String]): Proximity = {
+    val (_, seqSlots) = slotsOf(seq)
+    Proximity("PHRASE", seq, pos => phraseMatchPositions(pos, seqSlots),
+      toks => toks.containsSlice(seq))
+  }
+
+  /** Unordered NEAR over DISTINCT terms (see [[nearTopK]]). */
+  private def near(terms: Vector[String], slop: Int): Proximity = {
+    val idx = terms.zipWithIndex.toMap
+    Proximity(s"NEAR:$slop", terms, pos => nearMatchPositions(pos, slop),
+      toks => nearMatch(toks, idx, terms.size, slop))
+  }
+
+  private def orderedNear(seq: Vector[String], slop: Int): Proximity = {
+    val (slotOf, seqSlots) = slotsOf(seq)
+    Proximity(s"ONEAR:$slop", seq,
+      pos => orderedNearMatchPositions(pos, seqSlots, slop),
+      toks => orderedNearMatchPositions(occurrencesBySlot(toks, slotOf),
+        seqSlots, slop))
+  }
+
+  /** One planned query for [[execute]]. `must` are the PLANNED survivors
+    * (proximity slots first), `should` likewise; `not` and `filters`
+    * (encoded field terms) are never scored. `minMatch` SHOULD terms
+    * must match — at least 1 when `must` is empty. */
+  private final case class Clauses(must: Vector[TermStats],
+                                   should: Vector[TermStats],
+                                   not: Vector[String],
+                                   filters: Vector[String],
+                                   minMatch: Int,
+                                   boosts: Map[String, Double] = Map.empty,
+                                   prox: Option[Proximity] = None) {
+    /** Scored terms in the canonical (df asc, term asc) fold order. */
+    val scored: Vector[TermStats] = (must ++ should).sortBy(t => (t.df, t.term))
+    /** Canonical slot per term: scored terms, then the never-scored
+      * MUST_NOT and FILTER slots (they always contribute 0.0). */
+    val canonical: Map[String, Int] =
+      (scored.map(_.term) ++ not ++ filters).zipWithIndex.toMap
+    val df: Map[String, Long] = scored.map(t => t.term -> t.df).toMap
+  }
+
+  /** One shard's cursors split by clause role, in scan order. */
+  private final class Roles(val must: Array[Wand.TermCursor],
+                            val should: Array[Wand.TermCursor],
+                            val not: Array[Wand.TermCursor],
+                            val filters: Array[Wand.TermCursor])
+
+  private def roles(c: Clauses, stats: CorpusStats,
+                    chunks: Seq[(String, IndexedSeq[PostingCodec.BlockedList])]): Roles = {
+    val cursors = chunks.map { case (term, cs) =>
+      // typed-field terms (r7) are WEIGHTLESS (Lucene FILTER clauses):
+      // zero score, zero upper bounds. Their df is the per-shard posting
+      // count — the dictionary excludes the namespace, and the local
       // count is the better driver-order heuristic anyway.
       val isField = Analyzer.isFieldTerm(term)
-      val df = if (isField) sorted.map(_.count.toLong).sum
-               else dfByTerm(term)
-      new Wand.TermCursor(
-        Wand.TermPostings(term, df, canonical(term), sorted),
-        nDocs, avgdl, scored = !isField,
-        boost = boostOf.getOrElse(term, 1.0))
-    }.toSeq
+      val df = if (isField) cs.map(_.count.toLong).sum else c.df.getOrElse(term, 0L)
+      new Wand.TermCursor(Wand.TermPostings(term, df, c.canonical(term), cs),
+        stats.nDocs, stats.avgdl, scored = !isField,
+        boost = c.boosts.getOrElse(term, 1.0))
+    }
+    def of(terms: Set[String]) = cursors.filter(x => terms(x.term)).toArray
+    new Roles(of(c.must.map(_.term).toSet), of(c.should.map(_.term).toSet),
+      of(c.not.toSet), of(c.filters.toSet))
+  }
 
+  /** Run one planned query over `ranges` (None = the whole corpus): the
+    * shard-local top-k walk on [[scanShards]], or [[rescanVerify]] for a
+    * proximity clause on an index built without positions. */
+  private def execute(spark: SparkSession, root: String, m: Manifest,
+                      c: Clauses, stats: CorpusStats, k: Int,
+                      ranges: Option[Seq[(Long, Long)]],
+                      after: Option[SearchHit]): Vector[SearchHit] = {
+    import spark.implicits._
+    val (segs, shardPrune) = segsAndPrune(m, ranges)
+    if (segs.isEmpty || c.scored.isEmpty) Vector.empty // empty scope / plan
+    else if (c.prox.nonEmpty && !m.positions)
+      rescanVerify(spark, root, m, c, stats, k, segs, shardPrune)
+    else scanShards(spark, root, m, shardPrune, c.canonical.keys.toSeq,
+        withPos = c.prox.nonEmpty) { (_, chunks) =>
+        shardTopK(c, roles(c, stats, chunks), k, segs, after)
+      }.collect().toVector.sortBy(h => (-h.score, h.docId)).take(k)
+  }
+
+  /** Relative inflation on the conjunctive walk's admission bound:
+    * covers float-association slack between `mustScore + shouldUbSum`
+    * and the canonical-order total, orders of magnitude below any real
+    * adjacent-score gap. Over-admission only costs probes;
+    * under-admission would break exactness. */
+  private val BoolBoundSlack = 1.0 + 1e-12
+
+  /** One shard's exact top-k. A MUST term or filter absent from the
+    * shard, or fewer than `minMatch` SHOULD lists present, means no doc
+    * here can qualify (a doc's postings are complete within its shard);
+    * an absent MUST_NOT list excludes nothing.
+    *
+    *  - no MUST — the disjunctive dispatch: minMatch 1 is rank-identical
+    *    to OR (spec-pinned law) and takes the WAND/BMW-pruned
+    *    [[Wand.orTopKSegments]]; minMatch > 1 takes the count-qualified
+    *    [[Wand.shouldTopKSegments]]; filters and negatives are required /
+    *    prohibited probes.
+    *  - MUST present — the conjunctive walk: [[Wand.andAllWith]] over
+    *    MUST + weightless filters (a rare filter list then drives), and
+    *    per candidate, cheapest rejection first: the admission bound
+    *    `(mustScore + Σ SHOULD upper bounds) · BoolBoundSlack ≥ heap
+    *    threshold` (`>=` keeps threshold ties — exactness), the monotone
+    *    MUST_NOT probes, the positional predicate on the proximity slots,
+    *    then the SHOULD probes and the canonical fold. The complete
+    *    intersection is enumerated — a k-cut before exclusion or
+    *    verification could drop includable hits. */
+  private def shardTopK(c: Clauses, r: Roles, k: Int,
+                        segs: Vector[(Long, Long)],
+                        after: Option[SearchHit]): Iterator[SearchHit] =
+    if (r.must.length < c.must.size || r.filters.length < c.filters.size ||
+        r.should.length < c.minMatch) Iterator.empty
+    else if (c.must.isEmpty) {
+      if (c.minMatch == 1)
+        Wand.orTopKSegments(r.should.toIndexedSeq, k, segs,
+          required = r.filters.toIndexedSeq, after = after,
+          prohibited = r.not.toIndexedSeq).iterator
+      else Wand.shouldTopKSegments(r.should.toIndexedSeq, c.minMatch, k, segs,
+        required = r.filters.toIndexedSeq, prohibited = r.not.toIndexedSeq,
+        after = after).iterator
+    } else {
+      val heap = new Wand.TopK(k, after)
+      var shouldUbSum = 0.0
+      r.should.foreach(x => shouldUbSum += x.upperBound)
+      val contribs = new Array[Double](c.canonical.size)
+      val slotOf = c.prox.map(_.slots.zipWithIndex.toMap).getOrElse(Map.empty)
+      val posPred = c.prox.map(_.posPred).orNull
+      val posBySlot = new Array[Array[Int]](slotOf.size) // reused per match
+      val walk = Wand.andAllWith((r.must ++ r.filters).toIndexedSeq, segs) {
+        (d, s, arr) =>
+        if ((s + shouldUbSum) * BoolBoundSlack >= heap.threshold &&
+            !Wand.presentInAny(r.not, d) &&
+            (posPred == null || {
+              var i = 0
+              while (i < arr.length) {
+                val so = slotOf.getOrElse(arr(i).term, -1)
+                if (so >= 0) posBySlot(so) = arr(i).positions
+                i += 1
+              }
+              posPred(posBySlot)
+            })) {
+          java.util.Arrays.fill(contribs, 0.0)
+          var i = 0
+          while (i < arr.length) { // must + weightless filters
+            contribs(arr(i).canonical) = arr(i).score
+            i += 1
+          }
+          var matched = 0
+          i = 0
+          while (i < r.should.length) {
+            val x = r.should(i)
+            x.advanceTo(d)
+            if (!x.exhausted && x.docId == d) {
+              contribs(x.canonical) = x.score
+              matched += 1
+            }
+            i += 1
+          }
+          if (matched >= c.minMatch) heap.offer(d, Wand.canonicalSum(contribs))
+        }
+      }
+      while (walk.hasNext) walk.next() // drain (lazy iterator)
+      heap.results.iterator
+    }
+
+  /** Run a planned AND/OR query: AND puts the plan's terms in MUST, OR in
+    * SHOULD with minMatch 1; `filters` (encoded field terms) are
+    * weightless FILTER clauses. */
   def executePlan(spark: SparkSession, root: String, p: Plan,
                   stats: CorpusStats,
                   ranges: Option[Seq[(Long, Long)]] = None,
                   pinned: Option[Manifest] = None,
                   filters: Vector[String] = Vector.empty,
                   after: Option[SearchHit] = None): Vector[SearchHit] = {
+    requireMode(p.mode)
+    val c =
+      if (p.mode == "AND") Clauses(p.terms, Vector.empty, Vector.empty, filters, 0)
+      else Clauses(Vector.empty, p.terms, Vector.empty, filters, 1)
+    execute(spark, root, pinned.getOrElse(pinnedManifest(root)), c, stats,
+      p.k, ranges, after)
+  }
+
+  /** THE rescan verifier, for proximity clauses on an index built
+    * without positions:
+    *  1. the COMPLETE MUST ∩ FILTER intersection via [[scanShards]] with
+    *     [[Wand.andAll]] — no top-k cut before the verify, else hits could
+    *     be dropped — pinned (localCheckpoint) as a candidate frame;
+    *  2. the docs scan prunes to the shards that produced candidates and
+    *     joins them once (broadcast when the candidate count is small);
+    *  3. in-task, the re-analyzed token stream decides everything: the
+    *     proximity predicate, MUST_NOT, the SHOULD count and the full
+    *     canonical fold — tf, dl and df are the numbers the postings hold,
+    *     so scores stay bit-equal to the positional walk;
+    *  4. the global top-k.
+    * A proximity query over frequent terms degrades to a partial corpus
+    * re-tokenize here — the positional format exists for exactly that
+    * workload (VERDICT r05 item 2). */
+  private def rescanVerify(spark: SparkSession, root: String, m: Manifest,
+                           c: Clauses, stats: CorpusStats, k: Int,
+                           segs: Vector[(Long, Long)],
+                           shardPrune: DataFrame => DataFrame): Vector[SearchHit] = {
     import spark.implicits._
-    val m = pinned.getOrElse(pinnedManifest(root))
-    val textTerms = p.terms.map(_.term)
-    // FILTER clauses (r7): pre-encoded field terms ride the same scan and
-    // cursor machinery as the query terms. AND mode puts them IN the
-    // intersection (weightless members — a rare filter list then DRIVES
-    // the walk); OR/SHOULD probe them per candidate (Wand required
-    // probes). Scores and statistics are untouched either way.
-    val termList = textTerms ++ filters
-    val dfByTerm = p.terms.map(t => t.term -> t.df).toMap ++
-      filters.map(_ -> 0L) // placeholder: buildCursors uses local counts
-    // canonical contribution order: df asc, term asc (§7.8.1); filter
-    // slots append after the scored terms and always contribute 0.0
-    val canonical = p.terms.sortBy(t => (t.df, t.term)).map(_.term)
-      .zipWithIndex.toMap ++
-      filters.zipWithIndex.map { case (t, i) => t -> (textTerms.size + i) }
-    val nDocs = stats.nDocs
-    val avgdl = stats.avgdl
-    val mode = p.mode
-    val k = p.k
-    val nText = textTerms.size
-    val nFilters = filters.size
-    val nTerms = termList.size
-    // "SHOULD:<m>" rides the mode string so Plan / scopedKeptPlan / memo
-    // keys need no new field; [[queryShould]] is the only producer
-    val minShould: Int =
-      if (mode.startsWith("SHOULD:")) mode.stripPrefix("SHOULD:").toInt else 0
-    val (segs, shardPrune) = segsAndPrune(m, ranges)
-    if (segs.isEmpty) return Vector.empty // empty scope
-
-    val wandNanos =
-      if (telemetry) Some(spark.sparkContext.longAccumulator("graft.wandNanos"))
-      else None
-
-    // Per-shard grouping must be COMPLETE inside each task: posting files
-    // are term-sorted, so if a shard's rows split across scan tasks at
-    // row-group boundaries, term-A chunks and term-B chunks land in
-    // different tasks — AND would see cursors.size < nTerms per fragment
-    // and silently drop the shard's hits, OR would emit partial-score
-    // duplicates (EngineParitySpec split-scan test pins this).
-    //
-    // ONE streaming pass over the task's rows (VERDICT r03 item 2): each
-    // row is decoded to its compressed BlockedList immediately and the
-    // Row object dropped, so task memory is exactly the selected terms'
-    // compressed posting bytes — never a second, Row-wrapped copy of the
-    // whole selection (the r03 rows.toVector held both at once).
-    def shardLocalTopK(selected: DataFrame): Array[SearchHit] =
-      selected
-        .select(postingScanColumns(withPos = false): _*)
-        .mapPartitions { rows =>
-          val t0 = System.nanoTime()
-          val byTerm = decodeByTerm(rows, withPos = false)
-          // one partition may pack several whole shards: group the (few)
-          // keys, never the rows
-          val byShard = byTerm.groupBy(_._1._1)
-          val out = byShard.iterator.flatMap { case (_, termChunks) =>
-            val all = buildCursors(termChunks, dfByTerm, canonical,
-              nDocs, avgdl)
-            // a doc's postings are complete within its shard: a missing
-            // filter list ⇒ no doc here carries that field value ⇒ empty
-            val (cursors, filterCur) = all.partition(_.scored)
-            val hits =
-              if (filterCur.size < nFilters) Vector.empty
-              else if (mode == "AND") {
-                // a term absent from this shard ⇒ empty local intersection;
-                // filters join the intersection as weightless members
-                if (cursors.size < nText) Vector.empty
-                else Wand.andTopKSegments(cursors ++ filterCur, k, segs,
-                  after)
-              } else if (minShould > 1) {
-                // fewer than minMatch scored terms present ⇒ no doc here
-                // can reach the count requirement
-                if (cursors.size < minShould) Vector.empty
-                else Wand.shouldTopKSegments(cursors, minShould, k, segs,
-                  required = filterCur, after = after)
-              } else Wand.orTopKSegments(cursors, k, segs,
-                // minShould == 1 is rank-identical to OR (spec-pinned
-                // law, WandSpec) — dispatching it here buys the full
-                // WAND/BMW pruning the exhaustive count walk lacks
-                // (VERDICT r7 item 1a)
-                required = filterCur, after = after)
-            hits
-          }.toVector
-          wandNanos.foreach(_.add(System.nanoTime() - t0))
-          out.iterator
+    val cand = scanShards(spark, root, m, shardPrune,
+        c.must.map(_.term) ++ c.filters, withPos = false) { (shard, chunks) =>
+        val r = roles(c, stats, chunks)
+        if (r.must.length < c.must.size || r.filters.length < c.filters.size)
+          Iterator.empty
+        else Wand.andAll((r.must ++ r.filters).toIndexedSeq, segs)
+          .map(h => (shard, h.docId))
+      }.toDF("shard", "docId")
+      .localCheckpoint(true) // one evaluation feeds shards, count, join
+    try {
+      // ONE action serves the emptiness probe and the broadcast decision
+      val candCount = cand.count()
+      if (candCount == 0L) return Vector.empty
+      val candShards =
+        cand.select($"shard").distinct().as[Int].collect().toSeq // O(shards)
+      val candFrame = cand.select($"docId")
+      val joinCand =
+        if (candCount <= PhraseBroadcastMax) broadcast(candFrame) else candFrame
+      // closure payload: tiny (query-sized) arrays
+      val ver = m.analyzerVersion
+      val verify = c.prox.get.verify
+      val scoredTerms = c.scored.toArray
+      val boostArr = scoredTerms.map(t => c.boosts.getOrElse(t.term, 1.0))
+      val shouldSet = c.should.map(_.term).toSet
+      val negSet = c.not.toSet
+      val nDocs = stats.nDocs
+      val avgdl = stats.avgdl
+      val minMatch = c.minMatch
+      IndexSnapshot.docsFor(spark, root, m, candShards)
+        .select($"docId", $"text")
+        .join(joinCand, "docId")
+        .select($"docId", $"text").as[(Long, String)]
+        .flatMap { case (d, txt) =>
+          val toks = Analyzer.tokensFor(ver, txt)
+          if (!verify(toks) || toks.exists(negSet)) None
+          else {
+            val dl = toks.length
+            var matched = 0
+            var s = 0.0
+            var i = 0
+            while (i < scoredTerms.length) { // canonical (df, term) order
+              val t = scoredTerms(i)
+              var tf = 0
+              toks.foreach(x => if (x == t.term) tf += 1)
+              if (tf > 0) {
+                if (shouldSet(t.term)) matched += 1
+                s += boostArr(i) * Bm25.score(tf, t.df, dl, nDocs, avgdl)
+              }
+              i += 1
+            }
+            if (matched >= minMatch) Some(SearchHit(d, s)) else None
+          }
         }
-        .collect()
-
-    // Execution path choice (VERDICT r02 item 2 — the r02 per-query
-    // `repartition($"shard")` fixed split-scan correctness but cost an 8×
-    // cold-latency regression: a shuffle stage per query):
-    //  - every shard dir holds ONE parquet file (the layout every build/
-    //    maintenance write produces) → scan with split sizing pinned to
-    //    the largest file, so one task = one whole shard file and the
-    //    in-task grouping is complete WITHOUT any shuffle — both cold and
-    //    through the serving cache (which pins the aligned frame);
-    //  - multi-file shard dirs (external/legacy layout) → fall back to
-    //    the repartition, trading latency for unconditional correctness.
-    val t0 = System.nanoTime()
-    val (scanFrame, pathName, needShuffle) = resolvedPostingsScan(spark, root, m)
-    val selected = shardPrune(scanFrame).filter($"term".isin(termList: _*))
-    val perShard =
-      shardLocalTopK(if (needShuffle) selected.repartition($"shard") else selected)
-    val execMs = (System.nanoTime() - t0) / 1e6
-
-    val merged = perShard.toVector.sortBy(h => (-h.score, h.docId)).take(k)
-    if (telemetry) System.err.println(
-      f"""{"graft_query_telemetry":{"mode":"$mode","terms":$nTerms,"k":$k,""" +
-      f""""path":"$pathName","exec_ms":$execMs%.1f,""" +
-      f""""wand_ms":${wandNanos.map(_.value / 1e6).getOrElse(-1.0)}%.1f,""" +
-      f""""shard_hits":${perShard.length},"hits":${merged.size}}}""")
-    merged
+        .orderBy($"score".desc, $"docId".asc).limit(k) // TakeOrderedAndProject
+        .collect().toVector
+    } finally {
+      // ADVICE r05 item 1: unpersist on a localCheckpoint-backed frame is
+      // a CacheManager no-op; the blocks free via the ContextCleaner when
+      // cand drops out of scope here. Kept as documentation of intent —
+      // if the checkpoint is ever swapped for cache(), this is the spot.
+      cand.unpersist(); ()
+    }
   }
 
   /** Candidate-set size below which the verification join broadcasts the
@@ -825,18 +967,9 @@ object SearchEngine {
     *    no docs join, no re-tokenize, per-shard top-k heap, driver merge.
     *    A phrase query then costs an AND query plus per-match ordinal
     *    probes: the Lucene PhraseQuery shape.
-    *  - positions-free index (rescan fallback):
-    *     1. enumerate the COMPLETE AND intersection with scores via one
-    *        shard-aligned posting scan ([[Wand.andAll]] — no top-k cut
-    *        before the phrase filter, else hits could be dropped);
-    *     2. pin the candidate frame (localCheckpoint) and prune the docs
-    *        scan to the shards that produced candidates;
-    *     3. join docs←candidates (broadcast when the candidate count is
-    *        small), keep docs whose token stream containsSlice the
-    *        phrase, take the global top-k.
-    *    A phrase of frequent terms degrades to a partial corpus
-    *    re-tokenize on this path — the positional format exists for
-    *    exactly that workload (VERDICT r05 item 2).
+    *  - positions-free index: [[rescanVerify]] joins the complete AND
+    *    candidates with their docs and keeps those whose re-analyzed
+    *    token stream containsSlice the phrase.
     *
     * `scopes` (conv-id prefixes, r6): per-scope statistics and segments
     * exactly like [[queryScoped]] — per scope, df/N/avgdl are scoped, the
@@ -854,16 +987,9 @@ object SearchEngine {
                  filter: QueryFilter = QueryFilter.Empty): Vector[SearchHit] = {
     val m = pinned.getOrElse(pinnedManifest(root))
     val seq = Analyzer.tokensFor(m.analyzerVersion, phraseText)
-    if (seq.isEmpty) return Vector.empty
-    val slots = seq.distinct.sorted // fixed capture order for posBySlot
-    val slotOfTerm = slots.zipWithIndex.toMap
-    val seqSlots = seq.map(slotOfTerm).toArray
-    memoized(root,
-      QueryKey(seq, "PHRASE", k, scopes, m.snapshotId, filter.cacheKey)) {
-      proximityTopK(spark, root, m, slots, k, scopes,
-        verify = toks => toks.containsSlice(seq),
-        posPred = pos => phraseMatchPositions(pos, seqSlots), filter)
-    }
+    if (seq.isEmpty) Vector.empty
+    else clauseQuery(spark, root, m, Vector.empty, Vector.empty, Vector.empty,
+      0, k, scopes, filter, prox = Some(phrase(seq)))
   }
 
   /** NEAR/slop proximity top-k (order-free): documents whose ANALYZED
@@ -906,92 +1032,13 @@ object SearchEngine {
                filter: QueryFilter = QueryFilter.Empty): Vector[SearchHit] = {
     require(slop >= 0, s"slop must be >= 0, got $slop")
     val m = pinned.getOrElse(pinnedManifest(root))
-    if (ordered) {
-      val seq = Analyzer.tokensFor(m.analyzerVersion, queryText)
-      if (seq.isEmpty) return Vector.empty
-      val slots = seq.distinct.sorted
-      val slotOfTerm = slots.zipWithIndex.toMap
-      val seqSlots = seq.map(slotOfTerm).toArray
-      memoized(root,
-        QueryKey(seq, s"ONEAR:$slop", k, scopes, m.snapshotId, filter.cacheKey)) {
-        proximityTopK(spark, root, m, slots, k, scopes,
-          // slotOfTerm hoisted OUT of the per-doc verify closure (r6
-          // review): the rescan path runs this per candidate row
-          verify = toks =>
-            orderedNearMatchPositions(occurrencesBySlot(toks, slotOfTerm), seqSlots, slop),
-          posPred = pos => orderedNearMatchPositions(pos, seqSlots, slop),
-          filter)
-      }
-    } else {
-      val terms = Analyzer.analyzeQueryFor(m.analyzerVersion, queryText)
-      if (terms.isEmpty) return Vector.empty
-      val slots = terms.distinct.sorted
-      val idx = terms.zipWithIndex.toMap
-      val n = terms.size
-      memoized(root,
-        QueryKey(terms, s"NEAR:$slop", k, scopes, m.snapshotId, filter.cacheKey)) {
-        proximityTopK(spark, root, m, slots, k, scopes,
-          verify = toks => nearMatch(toks, idx, n, slop),
-          posPred = pos => nearMatchPositions(pos, slop), filter)
-      }
-    }
-  }
-
-  /** Shared phrase/NEAR dispatcher: plan with PER-SCOPE (or corpus)
-    * statistics, no stop cap, missing-term ⇒ empty; then the positional
-    * in-walk verify on a positions-carrying index, the docs-join rescan
-    * otherwise. `slots` fixes the posBySlot capture order (sorted
-    * distinct terms). */
-  private def proximityTopK(spark: SparkSession, root: String, m: Manifest,
-                            slots: Vector[String], k: Int,
-                            scopes: Seq[String],
-                            verify: Vector[String] => Boolean,
-                            posPred: Array[Array[Int]] => Boolean,
-                            filter: QueryFilter = QueryFilter.Empty): Vector[SearchHit] = {
-    // FILTER clauses (r7) compose with phrase/NEAR: on the positional
-    // path, field cursors probe presence inside the shard-local walk
-    // (before the ordinal decode — the cheaper reject first) and the ts
-    // segments intersect the walk ranges; on the rescan path, role/tool/
-    // ts evaluate as column predicates on the docs join the verify
-    // already does. Scores and (scoped) statistics stay unfiltered.
-    val (fterms, tsRanges) = resolveFilter(spark, root, m, filter)
-    if (scopes.isEmpty) {
-      val stats = CorpusStats(m.nDocs, m.avgdl, m.analyzerVersion)
-      val p = plan(spark, root, QuerySpec(slots, "AND", k), stats,
-        applyStopCap = false, pinned = Some(m))
-      if (p.terms.size < slots.size) Vector.empty
-      else if (m.positions)
-        positionalVerifyTopK(spark, root, m, p, stats, k, slots, posPred,
-          combineRanges(None, tsRanges), fterms)
-      else candidateVerifyTopK(spark, root, m, p, stats, k, verify,
-        combineRanges(None, tsRanges), filter)
-    } else {
-      val all = scopes.flatMap { pre =>
-        val segs = scopeSegments(spark, root, m, pre)
-        if (segs.isEmpty) Vector.empty
-        else {
-          val n = segs.map(_.n).sum
-          val stats = CorpusStats(n, segs.map(_.sumDl).sum.toDouble / n,
-            m.analyzerVersion)
-          val ranges = segs.map(s => (s.lo, s.hi))
-          val dfs = scopedTermDf(spark, root, m, pre, slots, ranges)
-          // proximity semantics: ANY term absent from the scope ⇒ empty
-          if (slots.exists(t => dfs.getOrElse(t, 0L) <= 0L)) Vector.empty
-          else {
-            val kept = slots.map(t => TermStats(t, dfs(t), 0))
-              .sortBy(t => (t.df, t.term))
-            val p = Plan(kept, Vector.empty, "AND", k)
-            if (m.positions)
-              positionalVerifyTopK(spark, root, m, p, stats, k, slots,
-                posPred, combineRanges(Some(ranges), tsRanges), fterms)
-            else candidateVerifyTopK(spark, root, m, p, stats, k, verify,
-              combineRanges(Some(ranges), tsRanges), filter)
-          }
-        }
-      }
-      // union; overlapping scopes keep the best-scoring instance per doc
-      unionBest(all, k)
-    }
+    val ver = m.analyzerVersion
+    val prox =
+      if (ordered) orderedNear(Analyzer.tokensFor(ver, queryText), slop)
+      else near(Analyzer.analyzeQueryFor(ver, queryText), slop)
+    if (prox.seq.isEmpty) Vector.empty
+    else clauseQuery(spark, root, m, Vector.empty, Vector.empty, Vector.empty,
+      0, k, scopes, filter, prox = Some(prox))
   }
 
   /** Phrase adjacency over per-term ordinal lists (positional index):
@@ -1334,160 +1381,24 @@ object SearchEngine {
     *    negative probe excludes them all (empty); if planning DROPS it
     *    (unknown / stop-capped), the query behaves as AND-minus-negative
     *    over the remaining positives — exactly the oracle's
-    *    filtered-AND semantics. No pre-plan shortcut: one fired on raw
-    *    tokens here and diverged from the oracle on dropped overlaps
-    *    (r6 review).
+    *    filtered-AND semantics.
     *
-    * Execution: the positive intersection must be enumerated COMPLETELY
-    * before exclusion — a WAND k-cut on positives could keep only
-    * excluded docs and drop includable hits (the phrase/NEAR lesson) —
-    * so the lazy [[Wand.andAll]] stream drives a per-shard heap, with a
-    * forward [[Wand.TermCursor.advanceTo]] probe per negative term per
+    * Execution: the conjunctive walk of [[shardTopK]] with no SHOULD
+    * slots — the complete positive intersection, one forward
+    * [[Wand.TermCursor.advanceTo]] probe per negative term per admissible
     * candidate (candidates ascend, so the probes are one monotone merge
-    * per negative list, never a restart). A NOT query costs its AND query
-    * plus one posting merge per negative term; the heap-threshold
-    * shortcut skips the probes for candidates that cannot enter the
-    * top-k anyway (`>=` keeps threshold ties probed — exactness). */
+    * per negative list). A NOT query costs its AND query plus one posting
+    * merge per negative term. */
   def queryNot(spark: SparkSession, root: String, queryText: String,
                notText: String, k: Int = 10, scopes: Seq[String] = Nil,
                pinned: Option[Manifest] = None,
                filter: QueryFilter = QueryFilter.Empty,
                after: Option[SearchHit] = None): Vector[SearchHit] = {
-    require(after.isEmpty || scopes.isEmpty, ScopedAfterError)
     val m = pinned.getOrElse(pinnedManifest(root))
-    val pos = Analyzer.analyzeQueryFor(m.analyzerVersion, queryText)
-    // exclusion is SET semantics: sorted-distinct negatives, so
-    // `--not "join join"` and `--not "join"` share one memo entry and
-    // one probe cursor (ADVICE r06)
-    val neg = Analyzer.analyzeQueryFor(m.analyzerVersion, notText).distinct.sorted
-    if (pos.isEmpty) return Vector.empty
-    if (neg.isEmpty)
-      return if (scopes.isEmpty)
-        queryResolved(spark, root, m, queryText, "AND", k, filter, after)
-      else memoized(root,
-        QueryKey(pos, "AND", k, scopes, m.snapshotId, filter.cacheKey)) {
-        queryScopedUncached(spark, root, m, pos, "AND", k, scopes, filter)
-      }
-    val negSet = neg.toSet
-    // memo key: positives, a space separator (no analyzed token can
-    // contain one), then negatives — unambiguous vs any plain-AND key
-    memoized(root,
-      QueryKey(pos ++ (" " +: neg), "ANDNOT", k, scopes, m.snapshotId,
-        filter.cacheKey, afterKey(after))) {
-      val (fterms, tsRanges) = resolveFilter(spark, root, m, filter)
-      // POST-PLAN overlap check, per branch: a prohibited term that
-      // SURVIVES positive planning makes every candidate excluded —
-      // answer empty without a scan. (Checked after planning, not on raw
-      // tokens: an overlap the planner DROPS — unknown or stop-capped —
-      // must behave as AND-minus-negative over the remaining positives,
-      // the oracle's filtered-AND semantics. And andNotTopK needs the
-      // sets disjoint: a term on both sides would be routed to the
-      // positive cursors and never probed.)
-      if (scopes.isEmpty) {
-        val stats = CorpusStats(m.nDocs, m.avgdl, m.analyzerVersion)
-        val p = plan(spark, root, QuerySpec(pos, "AND", k), stats,
-          pinned = Some(m))
-        if (p.terms.isEmpty || p.terms.exists(t => negSet(t.term)))
-          Vector.empty
-        else andNotTopK(spark, root, m, p, neg, stats, k,
-          combineRanges(None, tsRanges), fterms, after)
-      } else {
-        // positives mirror queryScopedUncached exactly (shared planner)
-        val all = scopes.flatMap { sc =>
-          scopedKeptPlan(spark, root, m, pos, sc, "AND", k) match {
-            case None => Vector.empty
-            case Some((p, _, _)) if p.terms.exists(t => negSet(t.term)) =>
-              Vector.empty
-            case Some((p, stats, ranges)) =>
-              andNotTopK(spark, root, m, p, neg, stats, k,
-                combineRanges(Some(ranges), tsRanges), fterms)
-          }
-        }
-        unionBest(all, k)
-      }
-    }
-  }
-
-  /** Shard-local executor for [[queryNot]]: complete positive AND via the
-    * lazy [[Wand.andAllWith]] walk, ascending-candidate exclusion probes
-    * against the negative cursors, per-shard heap, driver merge. */
-  private def andNotTopK(spark: SparkSession, root: String, m: Manifest,
-                         p: Plan, negTerms: Vector[String],
-                         stats: CorpusStats, k: Int,
-                         ranges: Option[Seq[(Long, Long)]],
-                         fterms: Vector[String] = Vector.empty,
-                         after: Option[SearchHit] = None): Vector[SearchHit] = {
-    import spark.implicits._
-    val posTerms = p.terms.map(_.term)
-    val posSet = posTerms.toSet
-    require(!negTerms.exists(posSet),
-      "andNotTopK requires disjoint positive/negative sets (caller " +
-      "resolves overlaps post-plan)")
-    val nPos = posTerms.size
-    val nFilters = fterms.size
-    // negatives and filters ride the same scan and cursor machinery;
-    // df/canonical for them are placeholders (negatives never scored,
-    // filters weightless by construction — buildCursors)
-    val dfByTerm = p.terms.map(t => t.term -> t.df).toMap ++
-      negTerms.map(_ -> 0L) ++ fterms.map(_ -> 0L)
-    val canonical = p.terms.sortBy(t => (t.df, t.term)).map(_.term)
-      .zipWithIndex.toMap ++
-      negTerms.zipWithIndex.map { case (t, i) => t -> (nPos + i) } ++
-      fterms.zipWithIndex.map { case (t, i) => t -> (nPos + negTerms.size + i) }
-    val nDocs = stats.nDocs
-    val avgdl = stats.avgdl
-    val (segs, shardPrune) = segsAndPrune(m, ranges)
-    if (segs.isEmpty) return Vector.empty
-    val allTerms = posTerms ++ negTerms ++ fterms
-    val (scanFrame, _, needShuffle) = resolvedPostingsScan(spark, root, m)
-    val selected0 = shardPrune(scanFrame).filter($"term".isin(allTerms: _*))
-    val selected = if (needShuffle) selected0.repartition($"shard") else selected0
-    val perShard = selected
-      .select(postingScanColumns(withPos = false): _*)
-      .mapPartitions { rows =>
-        val byTerm = decodeByTerm(rows, withPos = false)
-        byTerm.groupBy(_._1._1).iterator.flatMap { case (_, termChunks) =>
-          val (fieldChunks, restChunks) = termChunks.partition {
-            case ((_, t), _) => Analyzer.isFieldTerm(t)
-          }
-          val (posChunks, negChunks) = restChunks.partition {
-            case ((_, t), _) => posSet(t)
-          }
-          val posCursors = buildCursors(posChunks, dfByTerm, canonical,
-            nDocs, avgdl)
-          val filterCursors = buildCursors(fieldChunks, dfByTerm, canonical,
-            nDocs, avgdl)
-          // a positive absent from this shard ⇒ empty local intersection
-          // (same for a filter: no doc here carries the value); a negative
-          // absent from this shard just excludes nothing here
-          if (posCursors.size < nPos || filterCursors.size < nFilters)
-            Iterator.empty
-          else {
-            val negArr = buildCursors(negChunks, dfByTerm, canonical,
-              nDocs, avgdl).toArray
-            val heap = new Wand.TopK(k, after)
-            // filters join the positive intersection as weightless
-            // members (a rare filter list then drives the walk)
-            val walk = Wand.andAllWith(posCursors ++ filterCursors, segs) { (d, s, _) =>
-              if (s >= heap.threshold) {
-                var excluded = false
-                var i = 0
-                while (i < negArr.length && !excluded) {
-                  negArr(i).advanceTo(d)
-                  if (!negArr(i).exhausted && negArr(i).docId == d)
-                    excluded = true
-                  i += 1
-                }
-                if (!excluded) heap.offer(d, s)
-              }
-            }
-            while (walk.hasNext) walk.next() // drain (lazy iterator)
-            heap.results.iterator
-          }
-        }
-      }
-      .collect()
-    perShard.toVector.sortBy(h => (-h.score, h.docId)).take(k)
+    val ver = m.analyzerVersion
+    clauseQuery(spark, root, m, Analyzer.analyzeQueryFor(ver, queryText),
+      Vector.empty, Analyzer.analyzeQueryFor(ver, notText), 0, k, scopes,
+      filter, after)
   }
 
   /** Boolean SHOULD / minimum_should_match top-k (Lucene BooleanQuery
@@ -1511,15 +1422,12 @@ object SearchEngine {
     * a clause is unsatisfiable. minMatch > n is unsatisfiable → empty;
     * minMatch < 1 is an error.
     *
-    * Execution: [[Wand.shouldTopKSegments]] inside the shard-local
-    * posting walk — candidates are enumerated from the
+    * Execution: the disjunctive dispatch of [[shardTopK]] —
+    * [[Wand.shouldTopKSegments]] enumerates candidates from the
     * (n − minMatch + 1) RAREST surviving lists (pigeonhole: a doc in
     * ≥ minMatch of n lists appears in at least one of them), while the
-    * hottest minMatch − 1 lists are only PROBED with monotone advanceTo.
-    * A 2-of-5 query never walks its two hottest postings — at 100 TB the
-    * walk cost is bounded by the rare lists, exactly the WAND shape plain
-    * OR gets from its block-max bounds. Per-shard top-k heaps, O(shards
-    * × k) to the driver; zero per-query shuffle on the aligned scan path.
+    * hottest minMatch − 1 lists are only PROBED with monotone advanceTo;
+    * minMatch = 1 takes the WAND/BMW-pruned OR walk.
     *
     * `scopes`: per-scope statistics/segments exactly like [[queryScoped]]
     * (per-scope df/N/avgdl and stop cap, best-instance union). Time
@@ -1530,36 +1438,10 @@ object SearchEngine {
                   filter: QueryFilter = QueryFilter.Empty,
                   after: Option[SearchHit] = None): Vector[SearchHit] = {
     require(minMatch >= 1, s"minMatch must be >= 1, got $minMatch")
-    require(after.isEmpty || scopes.isEmpty, ScopedAfterError)
     val m = pinned.getOrElse(pinnedManifest(root))
-    val terms = Analyzer.analyzeQueryFor(m.analyzerVersion, queryText).distinct
-    if (terms.isEmpty || minMatch > terms.size) return Vector.empty
-    val mode = s"SHOULD:$minMatch"
-    // matched-count semantics are order-free: sort the memo key so
-    // permuted queries share one entry
-    memoized(root,
-      QueryKey(terms.sorted, mode, k, scopes, m.snapshotId, filter.cacheKey,
-        afterKey(after))) {
-      val (fterms, tsRanges) = resolveFilter(spark, root, m, filter)
-      if (scopes.isEmpty) {
-        val stats = CorpusStats(m.nDocs, m.avgdl, m.analyzerVersion)
-        val p = plan(spark, root, QuerySpec(terms, "OR", k), stats,
-          pinned = Some(m))
-        if (p.terms.size < minMatch) Vector.empty
-        else executePlan(spark, root, p.copy(mode = mode), stats,
-          combineRanges(None, tsRanges), Some(m), fterms, after)
-      } else {
-        val all = scopes.flatMap { sc =>
-          scopedKeptPlan(spark, root, m, terms, sc, mode, k) match {
-            case Some((p, stats, ranges)) if p.terms.size >= minMatch =>
-              executePlan(spark, root, p, stats,
-                combineRanges(Some(ranges), tsRanges), Some(m), fterms)
-            case _ => Vector.empty
-          }
-        }
-        unionBest(all, k)
-      }
-    }
+    clauseQuery(spark, root, m, Vector.empty,
+      Analyzer.analyzeQueryFor(m.analyzerVersion, queryText), Vector.empty,
+      minMatch, k, scopes, filter, after)
   }
 
   /** The COMBINED Lucene BooleanQuery (r7): MUST + SHOULD + MUST_NOT +
@@ -1573,44 +1455,14 @@ object SearchEngine {
     *     terms only BOOST (Lucene's default: optional clauses add score
     *     but eliminate nothing)
     *
-    * Semantics per clause type keep each dedicated mode's contract
-    * EXACTLY: MUST terms analyze/drop-unknown/stop-cap like mode=AND
-    * (reference parity); SHOULD terms are set-semantics DISTINCT, and a
-    * SHOULD clause that can never match (unknown, stop-capped, or also
-    * PROHIBITED — a surviving doc can't contain it) still COUNTS toward
-    * minShouldMatch while never matching (Lucene: requirements don't
-    * relax for unsatisfiable clauses); MUST_NOT terms are never capped
-    * or dropped and contribute no score. Overlap resolution (Lucene
-    * clause algebra, documented deviations):
-    *
-    *   - a SHOULD term that is also MUST is auto-satisfied on every
-    *     candidate: it is removed from the SHOULD set and minShouldMatch
-    *     reduced by one per such term (duplicate clauses collapse —
-    *     set semantics, deliberately NOT Lucene's double-count scoring);
-    *   - a MUST term that is also MUST_NOT ⇒ empty (checked POST-plan on
-    *     the SURVIVING must terms, the [[queryNot]] rule);
-    *   - a SHOULD term that is also MUST_NOT stays in the requirement
-    *     count but can never match (see above).
-    *
-    * Scoring: BM25 sum over MUST + MATCHED SHOULD terms in ONE canonical
-    * (df asc, term asc) order over their union — bit-equal to the
-    * brute-force oracle. A hit's score never depends on what was
-    * filtered or prohibited.
-    *
-    * Execution (must present): the [[andNotTopK]] lazy-AND shape with
-    * per-candidate monotone SHOULD probes — candidates enumerate from
-    * the MUST intersection (+ weightless FILTER cursors), negatives
-    * exclude, present SHOULD cursors add score and count toward
-    * minShouldMatch; admission pre-check `mustScore + Σ(per-shard SHOULD
-    * upper bounds) ≥ heap threshold` (inflated by 1e-12 relative — far
-    * above the ≤ n·ulp float-association slack between the bound's sum
-    * order and the canonical fold, far below any real score gap — so
-    * the BMW shortcut can never drop an exact-top-k hit) skips the probe
-    * work for inadmissible candidates. No must: the count-qualified
-    * [[Wand.shouldTopKSegments]] walk with prohibited + filter probes.
-    * Per-shard heaps, O(shards × k) to the driver, zero per-query
-    * shuffle on the aligned scan path — a combined query costs its AND
-    * walk plus one forward merge per SHOULD/NOT list.
+    * All of them run through the same [[clauseQuery]], whose scaladoc
+    * states the per-clause semantics and the overlap algebra. Scoring:
+    * BM25 sum over MUST + MATCHED SHOULD terms in ONE canonical (df asc,
+    * term asc) order over their union — bit-equal to the brute-force
+    * oracle. A hit's score never depends on what was filtered or
+    * prohibited. Per-clause `boosts` (Lucene term^b) multiply that term's
+    * contribution — one IEEE multiply, applied identically in cursors,
+    * bounds and the oracle.
     *
     * `scopes`: per-scope stats/segments exactly like [[queryScoped]]
     * (MUST and SHOULD survivors re-planned per scope with scoped dfs,
@@ -1626,251 +1478,106 @@ object SearchEngine {
                 boosts: Map[String, Double] = Map.empty): Vector[SearchHit] = {
     require(minShouldMatch >= 0,
       s"minShouldMatch must be >= 0, got $minShouldMatch")
-    require(after.isEmpty || scopes.isEmpty, ScopedAfterError)
     val m = pinned.getOrElse(pinnedManifest(root))
-    // per-clause boosts (Lucene term^b): raw keys resolve to analyzed
-    // terms ONCE here; boosted contributions are boost × BM25 — one IEEE
-    // multiply, applied identically in cursors, bounds and the oracle
-    val boostOf = Analyzer.resolveBoosts(m.analyzerVersion, boosts)
-    val must = Analyzer.analyzeQueryFor(m.analyzerVersion, mustText)
-    val negs = Analyzer.analyzeQueryFor(m.analyzerVersion, notText).distinct.sorted
-    val shouldRaw = Analyzer.analyzeQueryFor(m.analyzerVersion, shouldText).distinct
-    // ---- clause-overlap resolution (see scaladoc) ----
-    val mustSet = must.toSet
-    val negSet = negs.toSet
-    val autoSatisfied = shouldRaw.count(mustSet)
-    val shouldKept = shouldRaw.filterNot(t => mustSet(t) || negSet(t))
-    val minEff = math.max(0, minShouldMatch - autoSatisfied)
-    // ---- degenerate delegation: each law IS the dedicated mode ----
-    // degenerate delegation only when UNBOOSTED (the dedicated modes
-    // have no boost parameter; the main path handles every shape)
-    if (boostOf.isEmpty && must.isEmpty && negs.isEmpty)
-      return queryShould(spark, root, shouldText,
-        math.max(1, minShouldMatch), k, scopes, Some(m), filter, after)
-    if (boostOf.isEmpty && shouldKept.isEmpty && minEff == 0 && must.nonEmpty)
-      return queryNot(spark, root, mustText, notText, k, scopes, Some(m),
-        filter, after)
-    if (must.isEmpty && shouldKept.isEmpty) return Vector.empty
-    if (minEff > shouldKept.size && must.nonEmpty) return Vector.empty
-    if (must.isEmpty && math.max(1, minEff) > shouldKept.size)
-      return Vector.empty
-    // memo key: three space-separated sections (no analyzed token holds a
-    // space) — resolution above is deterministic, so semantically equal
-    // queries share an entry
-    memoized(root,
-      QueryKey(must ++ (" " +: negs) ++ (" " +: shouldKept),
-        s"BOOL:$minEff" + boostKey(boostOf), k, scopes, m.snapshotId,
-        filter.cacheKey, afterKey(after))) {
-      val (fterms, tsRanges) = resolveFilter(spark, root, m, filter)
-      if (scopes.isEmpty) {
-        val stats = CorpusStats(m.nDocs, m.avgdl, m.analyzerVersion)
-        val pMust = plan(spark, root, QuerySpec(must, "AND", k), stats,
-          pinned = Some(m))
-        val pShould = plan(spark, root, QuerySpec(shouldKept, "OR", k),
-          stats, pinned = Some(m))
-        if (must.nonEmpty && pMust.terms.isEmpty) Vector.empty
-        else if (pMust.terms.exists(t => negSet(t.term))) Vector.empty
-        else if (pShould.terms.size < minEff) Vector.empty
-        else if (must.isEmpty && pShould.terms.size < math.max(1, minEff))
-          Vector.empty
-        else boolTopK(spark, root, m, pMust.terms, pShould.terms, negs,
-          minEff, stats, k, combineRanges(None, tsRanges), fterms, after,
-          boostOf)
-      } else {
-        val all = scopes.flatMap { sc =>
-          scopedKeptPlan(spark, root, m, must ++ shouldKept, sc, "BOOL", k) match {
-            case None => Vector.empty
-            case Some((pAll, stats, ranges)) =>
-              // ONE scoped df pass over must ∪ should, then split: both
-              // clause families see the same per-scope cap/drop rules as
-              // their dedicated modes (scopedKeptPlan IS that rule)
-              val mustKept = pAll.terms.filter(t => mustSet(t.term))
-              val shouldKeptScoped = pAll.terms.filterNot(t => mustSet(t.term))
-              if (must.nonEmpty && mustKept.size == 0) Vector.empty
-              else if (mustKept.exists(t => negSet(t.term))) Vector.empty
-              else if (shouldKeptScoped.size < minEff) Vector.empty
-              else if (must.isEmpty &&
-                  shouldKeptScoped.size < math.max(1, minEff)) Vector.empty
-              else boolTopK(spark, root, m, mustKept, shouldKeptScoped,
-                negs, minEff, stats, k,
-                combineRanges(Some(ranges), tsRanges), fterms,
-                boostOf = boostOf)
-          }
-        }
-        unionBest(all, k)
-      }
-    }
+    val ver = m.analyzerVersion
+    clauseQuery(spark, root, m, Analyzer.analyzeQueryFor(ver, mustText),
+      Analyzer.analyzeQueryFor(ver, shouldText),
+      Analyzer.analyzeQueryFor(ver, notText), minShouldMatch, k, scopes,
+      filter, after, Analyzer.resolveBoosts(ver, boosts))
   }
 
-  /** Relative inflation on the combined-query admission bound (see
-    * [[queryBool]] scaladoc): covers float-association slack between
-    * `mustScore + shouldUbSum` and the canonical-order total, orders of
-    * magnitude below any real adjacent-score gap. Over-admission only
-    * costs probes; under-admission would break exactness. */
-  private val BoolBoundSlack = 1.0 + 1e-12
-
-  /** Shard-local combined-BooleanQuery executor (see [[queryBool]]).
-    * `mustTerms`/`shouldTerms` are the PLANNED survivors; one canonical
-    * (df asc, term asc) order spans their union. */
-  private def boolTopK(spark: SparkSession, root: String, m: Manifest,
-                       mustTerms: Vector[TermStats],
-                       shouldTerms: Vector[TermStats],
-                       negTerms: Vector[String], minEff: Int,
-                       stats: CorpusStats, k: Int,
-                       ranges: Option[Seq[(Long, Long)]],
-                       fterms: Vector[String] = Vector.empty,
-                       after: Option[SearchHit] = None,
-                       boostOf: Map[String, Double] = Map.empty): Vector[SearchHit] = {
-    import spark.implicits._
-    val mustList = mustTerms.map(_.term)
-    val shouldList = shouldTerms.map(_.term)
-    val mustSet = mustList.toSet
-    val shouldSet = shouldList.toSet
-    val nMust = mustList.size
-    val nFilters = fterms.size
-    val scored = (mustTerms ++ shouldTerms).sortBy(t => (t.df, t.term))
-    val dfByTerm = scored.map(t => t.term -> t.df).toMap ++
-      negTerms.map(_ -> 0L) ++ fterms.map(_ -> 0L)
-    val canonical = scored.map(_.term).zipWithIndex.toMap ++
-      negTerms.zipWithIndex.map { case (t, i) => t -> (scored.size + i) } ++
-      fterms.zipWithIndex.map { case (t, i) =>
-        t -> (scored.size + negTerms.size + i) }
-    val nCanon = scored.size + negTerms.size + nFilters
-    val nDocs = stats.nDocs
-    val avgdl = stats.avgdl
-    // no-must branch needs Lucene's at-least-one rule
-    val minMatch = if (nMust == 0) math.max(1, minEff) else minEff
-    val (segs, shardPrune) = segsAndPrune(m, ranges)
-    if (segs.isEmpty) return Vector.empty
-    val allTerms = mustList ++ shouldList ++ negTerms ++ fterms
-    val (scanFrame, _, needShuffle) = resolvedPostingsScan(spark, root, m)
-    val selected0 = shardPrune(scanFrame).filter($"term".isin(allTerms: _*))
-    val selected = if (needShuffle) selected0.repartition($"shard") else selected0
-    val perShard = selected
-      .select(postingScanColumns(withPos = false): _*)
-      .mapPartitions { rows =>
-        val byTerm = decodeByTerm(rows, withPos = false)
-        byTerm.groupBy(_._1._1).iterator.flatMap { case (_, termChunks) =>
-          val (fieldChunks, restChunks) = termChunks.partition {
-            case ((_, t), _) => Analyzer.isFieldTerm(t)
-          }
-          val (mustChunks, rest2) = restChunks.partition {
-            case ((_, t), _) => mustSet(t)
-          }
-          val (shouldChunks, negChunks) = rest2.partition {
-            case ((_, t), _) => shouldSet(t)
-          }
-          val mustCursors = buildCursors(mustChunks, dfByTerm, canonical,
-            nDocs, avgdl, boostOf)
-          val filterCursors = buildCursors(fieldChunks, dfByTerm, canonical,
-            nDocs, avgdl)
-          val shouldArr = buildCursors(shouldChunks, dfByTerm, canonical,
-            nDocs, avgdl, boostOf).toArray
-          // a must/filter term absent from this shard ⇒ no candidate here;
-          // fewer than minMatch SHOULD lists present ⇒ no doc here can
-          // reach the count (a doc's postings are complete in its shard)
-          if (mustCursors.size < nMust || filterCursors.size < nFilters ||
-              shouldArr.length < minMatch)
-            Iterator.empty
-          else {
-            val negArr = buildCursors(negChunks, dfByTerm, canonical,
-              nDocs, avgdl).toArray
-            val heap = new Wand.TopK(k, after)
-            if (nMust == 0) {
-              // pure SHOULD (+ NOT/FILTER): minMatch == 1 is rank-identical
-              // to OR (spec-pinned law) and dispatches to the WAND/BMW-
-              // pruned walk; minMatch > 1 takes the count-qualified walk
-              // (itself bound-pruned since r8 — VERDICT r7 item 1)
-              if (minMatch == 1)
-                Wand.orTopKSegments(shouldArr.toIndexedSeq, k, segs,
-                  required = filterCursors, after = after,
-                  prohibited = negArr.toIndexedSeq)
-                  .iterator
-              else
-                Wand.shouldTopKSegments(shouldArr.toIndexedSeq, minMatch, k,
-                  segs, required = filterCursors,
-                  prohibited = negArr.toIndexedSeq, after = after)
-                  .iterator
-            } else {
-              // per-shard constant: Σ upper bounds of the PRESENT should
-              // lists — the admission bound's optional-score headroom
-              var shouldUbSum = 0.0
-              shouldArr.foreach(c => shouldUbSum += c.upperBound)
-              val contribs = new Array[Double](nCanon)
-              val walk = Wand.andAllWith(mustCursors ++ filterCursors, segs) {
-                (d, s, arr) =>
-                if ((s + shouldUbSum) * BoolBoundSlack >= heap.threshold &&
-                    !Wand.presentInAny(negArr, d)) {
-                  java.util.Arrays.fill(contribs, 0.0)
-                  var i = 0
-                  while (i < arr.length) { // must + weightless filters
-                    contribs(arr(i).canonical) = arr(i).score
-                    i += 1
-                  }
-                  var matched = 0
-                  i = 0
-                  while (i < shouldArr.length) {
-                    shouldArr(i).advanceTo(d)
-                    if (!shouldArr(i).exhausted && shouldArr(i).docId == d) {
-                      contribs(shouldArr(i).canonical) = shouldArr(i).score
-                      matched += 1
-                    }
-                    i += 1
-                  }
-                  if (matched >= minMatch)
-                    heap.offer(d, Wand.canonicalSum(contribs))
-                }
-              }
-              while (walk.hasNext) walk.next() // drain (lazy iterator)
-              heap.results.iterator
-            }
-          }
-        }
+  /** THE planner behind every term-level query (AND/OR, MUST_NOT,
+    * SHOULD, the combined BooleanQuery, phrase/NEAR alone or as a
+    * clause). Per clause type, each dedicated mode's contract:
+    *
+    *   - MUST terms: drop-unknown + stop cap (reference parity, mode=AND);
+    *     all of them dropped ⇒ empty — unless a proximity clause drives;
+    *   - proximity slots (`prox`): required positionally, no stop cap,
+    *     any slot unknown to the target ⇒ empty (dropping a term would
+    *     change phrase semantics); a MUST term that is also a slot dedupes
+    *     into it;
+    *   - SHOULD terms: set-semantics DISTINCT, drop-unknown + stop cap;
+    *     a clause that can never match (unknown, capped, or PROHIBITED)
+    *     still COUNTS toward `minShouldMatch` while never matching;
+    *   - MUST_NOT terms: set semantics, never capped or dropped, no score.
+    *
+    * Overlap algebra (Lucene clause algebra, documented deviations): a
+    * SHOULD term that is also required is auto-satisfied — removed, and
+    * `minShouldMatch` reduced by one per such term (set semantics, NOT
+    * Lucene's double-count scoring); a MUST_NOT slot ⇒ empty (every hit
+    * would hold it); a SURVIVING must term that is also MUST_NOT ⇒ empty
+    * (checked after planning: an overlap the planner drops behaves as
+    * AND-minus-negative over the remaining terms, the oracle's semantics).
+    * With no required clause at least one SHOULD must match.
+    *
+    * search_after is single-walk only ([[ScopedAfterError]]). The memo
+    * key is the resolved clause sets, so semantically equal queries share
+    * an entry. */
+  private def clauseQuery(spark: SparkSession, root: String, m: Manifest,
+                          must: Vector[String], shouldText: Vector[String],
+                          notText: Vector[String], minShouldMatch: Int,
+                          k: Int, scopes: Seq[String], filter: QueryFilter,
+                          after: Option[SearchHit] = None,
+                          boostOf: Map[String, Double] = Map.empty,
+                          prox: Option[Proximity] = None): Vector[SearchHit] = {
+    require(after.isEmpty || scopes.isEmpty, ScopedAfterError)
+    val slots = prox.fold(Vector.empty[String])(_.slots)
+    val negs = notText.distinct.sorted
+    val negSet = negs.toSet
+    val required = must.toSet ++ slots
+    val mustExtra = must.filterNot(slots.toSet)
+    val should = shouldText.distinct
+    val shouldKept = should.filterNot(t => required(t) || negSet(t))
+    val minEff = math.max(0, minShouldMatch - should.count(required))
+    val minMatch = if (required.isEmpty) math.max(1, minEff) else minEff
+    if (negs.exists(slots.contains) || minMatch > shouldKept.size)
+      return Vector.empty
+    // four space-separated sections (no analyzed token holds a space)
+    memoized(root,
+      QueryKey(prox.fold(Vector.empty[String])(_.seq) ++ (" " +: mustExtra) ++
+        (" " +: negs) ++ (" " +: shouldKept.sorted),
+        s"${prox.fold("BOOL")(_.label)}:$minEff" + boostKey(boostOf), k,
+        scopes, m.snapshotId, filter.cacheKey, afterKey(after))) {
+      val (fterms, tsRanges) = resolveFilter(spark, root, m, filter)
+      fanOut(spark, root, m, scopes, tsRanges, k) { t =>
+        val dfs = t.dfOf(slots ++ mustExtra ++ shouldKept)
+        val exact = slots.flatMap(s => dfs.get(s).map(TermStats(s, _, 0)))
+        val pMust = capped(mustExtra, dfs, t.stats.nDocs)
+        val pShould = capped(shouldKept, dfs, t.stats.nDocs)
+        if (exact.size < slots.size ||
+            (slots.isEmpty && must.nonEmpty && pMust.isEmpty) ||
+            pMust.exists(x => negSet(x.term)) || pShould.size < minMatch)
+          Vector.empty
+        else execute(spark, root, m,
+          Clauses(exact ++ pMust, pShould, negs, fterms, minMatch, boostOf, prox),
+          t.stats, k, t.ranges, after)
       }
-      .collect()
-    perShard.toVector.sortBy(h => (-h.score, h.docId)).take(k)
+    }
   }
 
   /** Phrase-as-clause (r7): the combined BooleanQuery with a PHRASE (or
     * unordered-NEAR, `slop = Some(n)`) clause among the required ones —
     * what a Lucene BooleanQuery holds when a PhraseQuery rides MUST next
-    * to term clauses, and the composition [[QueryParser]] refused until
-    * now. UNSCOPED only (scoped composed queries would need per-scope
-    * re-planning of three clause families at once — refused for now, the
-    * standalone scoped phrase/NEAR surfaces still exist); composes with
-    * typed field [[QueryFilter]]s and time travel.
+    * to term clauses. UNSCOPED only (the standalone scoped phrase/NEAR
+    * surfaces exist); composes with typed field [[QueryFilter]]s and
+    * time travel.
     *
-    * Clause semantics are each family's dedicated contract, unchanged:
-    *   - the PHRASE terms are required positionally: no stop cap, an
-    *     index-unknown phrase term answers EMPTY (never dropped) — the
-    *     [[phraseTopK]] contract; `slop = Some(n)` uses the order-free
-    *     slop-n window ([[nearTopK]]'s slop+1-wide divergence note
-    *     applies);
-    *   - MUST terms NOT already in the phrase: AND semantics
-    *     (drop-unknown + stop cap); a MUST term that is also a phrase
-    *     term dedupes into it (it is already required; set-semantics
-    *     scoring, never double-counted);
-    *   - SHOULD terms minus (phrase ∪ MUST ∪ MUST_NOT): [[queryBool]]'s
-    *     overlap algebra with the phrase terms counting as
-    *     auto-satisfiers;
-    *   - a MUST_NOT term that is also a phrase term ⇒ empty (every
-    *     phrase hit contains it); must∩not resolves POST-plan as in
-    *     [[queryNot]].
+    * Clause semantics and overlap algebra are [[clauseQuery]]'s, with the
+    * phrase terms as its proximity slots: an index-unknown phrase term
+    * answers EMPTY (the [[phraseTopK]] contract), MUST terms not in the
+    * phrase drop-and-continue (the phrase still drives), a MUST term that
+    * is also a phrase term dedupes into it, SHOULD terms overlapping the
+    * phrase auto-satisfy, a MUST_NOT phrase term ⇒ empty. `slop = Some(n)`
+    * uses the order-free slop-n window ([[nearTopK]]'s slop+1-wide
+    * divergence note applies).
     *
     * Scoring: BM25 over DISTINCT(phrase ∪ MUST) + matched SHOULD in one
     * canonical (df, term) order — a composed hit whose SHOULD terms are
     * all absent scores exactly like its plain-phrase hit.
     *
-    * Execution: positional index — ONE shard-local walk over the
-    * required cursors (phrase + must + weightless filters), per
-    * candidate: admission bound (mustScore + Σ SHOULD UBs, the
-    * [[BoolBoundSlack]] inflation), MUST_NOT probes, the ordinal
-    * predicate on the phrase slots, SHOULD probes, canonical-fold offer.
-    * Positions-free index — rescan fallback: the required-AND candidate
-    * frame joins docs once and EVERYTHING (phrase window, negatives,
-    * SHOULD count, the full canonical fold) evaluates from the analyzed
-    * token stream in-task; bit-equal to the positional path because tf,
-    * dl and df are the same numbers by construction. */
+    * Execution: positional index — the conjunctive walk of [[shardTopK]]
+    * over phrase + must + weightless filters with the ordinal predicate
+    * gating each candidate; positions-free index — [[rescanVerify]]. */
   def queryBoolPhrase(spark: SparkSession, root: String, phraseText: String,
                       slop: Option[Int] = None, mustText: String = "",
                       shouldText: String = "", notText: String = "",
@@ -1882,274 +1589,25 @@ object SearchEngine {
       s"minShouldMatch must be >= 0, got $minShouldMatch")
     slop.foreach(n => require(n >= 0, s"slop must be >= 0, got $n"))
     val m = pinned.getOrElse(pinnedManifest(root))
-    val boostOf = Analyzer.resolveBoosts(m.analyzerVersion, boosts)
-    val seq = Analyzer.tokensFor(m.analyzerVersion, phraseText)
+    val ver = m.analyzerVersion
+    val seq = Analyzer.tokensFor(ver, phraseText)
     if (seq.isEmpty)
-      return queryBool(spark, root, mustText, shouldText, notText,
+      queryBool(spark, root, mustText, shouldText, notText,
         minShouldMatch, k, Nil, Some(m), filter, boosts = boosts)
-    val must = Analyzer.analyzeQueryFor(m.analyzerVersion, mustText)
-    val negs = Analyzer.analyzeQueryFor(m.analyzerVersion, notText).distinct.sorted
-    val shouldRaw = Analyzer.analyzeQueryFor(m.analyzerVersion, shouldText).distinct
-    val slots = seq.distinct.sorted
-    val slotSet = slots.toSet
-    val negSet = negs.toSet
-    if (negs.exists(slotSet)) return Vector.empty // every hit would hold it
-    val mustExtra = must.filterNot(slotSet) // dedupe into the phrase clause
-    val requiredSet = must.toSet ++ slotSet
-    val autoSatisfied = shouldRaw.count(requiredSet)
-    val shouldKept = shouldRaw.filterNot(t => requiredSet(t) || negSet(t))
-    val minEff = math.max(0, minShouldMatch - autoSatisfied)
-    if (minEff > shouldKept.size) return Vector.empty
-    if (boostOf.isEmpty && mustExtra.isEmpty && shouldKept.isEmpty &&
-        negs.isEmpty && minEff == 0)
-      return slop match { // pure phrase/NEAR (+filters): the dedicated mode
-        case None => phraseTopK(spark, root, phraseText, k, Nil, Some(m), filter)
-        case Some(n) => nearTopK(spark, root, phraseText, n, k, Nil, Some(m),
-          filter = filter)
-      }
-    val slotOfTerm = slots.zipWithIndex.toMap
-    val seqSlots = seq.map(slotOfTerm).toArray
-    val (posPred, verify): (Array[Array[Int]] => Boolean, Vector[String] => Boolean) =
-      slop match {
-        case None =>
-          (pos => phraseMatchPositions(pos, seqSlots),
-            toks => toks.containsSlice(seq))
-        case Some(n) =>
-          // NEAR is over DISTINCT terms (window holds every distinct
-          // term) — idx/nTerms must be the deduped view, like nearTopK
-          val dterms = seq.distinct
-          val idx = dterms.zipWithIndex.toMap
-          (pos => nearMatchPositions(pos, n),
-            toks => nearMatch(toks, idx, dterms.size, n))
-      }
-    memoized(root,
-      QueryKey(seq ++ (" " +: mustExtra) ++ (" " +: negs) ++ (" " +: shouldKept),
-        s"BOOLPHRASE:${slop.getOrElse(-1)}:$minEff" + boostKey(boostOf),
-        k, Nil, m.snapshotId, filter.cacheKey)) {
-      val (fterms, tsRanges) = resolveFilter(spark, root, m, filter)
-      val stats = CorpusStats(m.nDocs, m.avgdl, m.analyzerVersion)
-      // phrase slots: no cap, unknown ⇒ EMPTY (the phrase contract) —
-      // must: AND drop-unknown + cap (drop-and-continue: the phrase
-      // still drives, reference parity) — should: OR cap, survivors
-      // bound the count requirement
-      val pSlots = plan(spark, root, QuerySpec(slots, "AND", k), stats,
-        applyStopCap = false, pinned = Some(m))
-      val pMust = plan(spark, root, QuerySpec(mustExtra, "AND", k), stats,
-        pinned = Some(m))
-      val pShould = plan(spark, root, QuerySpec(shouldKept, "OR", k), stats,
-        pinned = Some(m))
-      if (pSlots.terms.size < slots.size) Vector.empty
-      else if (pMust.terms.exists(t => negSet(t.term))) Vector.empty
-      else if (pShould.terms.size < minEff) Vector.empty
-      else {
-        val required = pSlots.terms ++ pMust.terms
-        val ranges = combineRanges(None, tsRanges)
-        if (m.positions)
-          boolPhrasePositional(spark, root, m, required, pShould.terms,
-            negs, minEff, stats, k, slots, posPred, ranges, fterms, boostOf)
-        else
-          boolPhraseRescan(spark, root, m, required, pShould.terms, negs,
-            minEff, stats, k, verify, ranges, filter, boostOf)
-      }
-    }
-  }
-
-  /** Positional executor for [[queryBoolPhrase]]: the [[boolTopK]] walk
-    * with the phrase-slot ordinal predicate gating admission. */
-  private def boolPhrasePositional(spark: SparkSession, root: String,
-                                   m: Manifest,
-                                   requiredTerms: Vector[TermStats],
-                                   shouldTerms: Vector[TermStats],
-                                   negTerms: Vector[String], minEff: Int,
-                                   stats: CorpusStats, k: Int,
-                                   slots: Vector[String],
-                                   posPred: Array[Array[Int]] => Boolean,
-                                   ranges: Option[Seq[(Long, Long)]],
-                                   fterms: Vector[String],
-                                   boostOf: Map[String, Double] = Map.empty): Vector[SearchHit] = {
-    import spark.implicits._
-    require(m.positions, "positional composed query needs positions")
-    val reqList = requiredTerms.map(_.term)
-    val reqSet = reqList.toSet
-    val shouldList = shouldTerms.map(_.term)
-    val shouldSet = shouldList.toSet
-    val nReq = reqList.size
-    val nFilters = fterms.size
-    val scored = (requiredTerms ++ shouldTerms).sortBy(t => (t.df, t.term))
-    val dfByTerm = scored.map(t => t.term -> t.df).toMap ++
-      negTerms.map(_ -> 0L) ++ fterms.map(_ -> 0L)
-    val canonical = scored.map(_.term).zipWithIndex.toMap ++
-      negTerms.zipWithIndex.map { case (t, i) => t -> (scored.size + i) } ++
-      fterms.zipWithIndex.map { case (t, i) =>
-        t -> (scored.size + negTerms.size + i) }
-    val nCanon = scored.size + negTerms.size + nFilters
-    val slotOf = slots.zipWithIndex.toMap
-    val nSlots = slots.size
-    val nDocs = stats.nDocs
-    val avgdl = stats.avgdl
-    val (segs, shardPrune) = segsAndPrune(m, ranges)
-    if (segs.isEmpty) return Vector.empty
-    val allTerms = reqList ++ shouldList ++ negTerms ++ fterms
-    val (scanFrame, _, needShuffle) =
-      resolvedPostingsScan(spark, root, m, needPositions = true)
-    val selected0 = shardPrune(scanFrame).filter($"term".isin(allTerms: _*))
-    val selected = if (needShuffle) selected0.repartition($"shard") else selected0
-    val perShard = selected
-      .select(postingScanColumns(withPos = true): _*)
-      .mapPartitions { rows =>
-        val byTerm = decodeByTerm(rows, withPos = true)
-        byTerm.groupBy(_._1._1).iterator.flatMap { case (_, termChunks) =>
-          val (fieldChunks, restChunks) = termChunks.partition {
-            case ((_, t), _) => Analyzer.isFieldTerm(t)
-          }
-          val (reqChunks, rest2) = restChunks.partition {
-            case ((_, t), _) => reqSet(t)
-          }
-          val (shouldChunks, negChunks) = rest2.partition {
-            case ((_, t), _) => shouldSet(t)
-          }
-          val reqCursors = buildCursors(reqChunks, dfByTerm, canonical,
-            nDocs, avgdl, boostOf)
-          val filterCursors = buildCursors(fieldChunks, dfByTerm, canonical,
-            nDocs, avgdl)
-          val shouldArr = buildCursors(shouldChunks, dfByTerm, canonical,
-            nDocs, avgdl, boostOf).toArray
-          if (reqCursors.size < nReq || filterCursors.size < nFilters ||
-              shouldArr.length < minEff)
-            Iterator.empty
-          else {
-            val negArr = buildCursors(negChunks, dfByTerm, canonical,
-              nDocs, avgdl).toArray
-            val heap = new Wand.TopK(k)
-            var shouldUbSum = 0.0
-            shouldArr.foreach(c => shouldUbSum += c.upperBound)
-            val contribs = new Array[Double](nCanon)
-            val posBySlot = new Array[Array[Int]](nSlots) // reused per match
-            val walk = Wand.andAllWith(reqCursors ++ filterCursors, segs) {
-              (d, s, arr) =>
-              // cheapest rejections first: admission bound, then the
-              // monotone NOT probes, then the ordinal decode + phrase
-              // predicate, then the SHOULD probes + canonical fold
-              if ((s + shouldUbSum) * BoolBoundSlack >= heap.threshold &&
-                  !Wand.presentInAny(negArr, d)) {
-                var i = 0
-                while (i < arr.length) {
-                  val so = slotOf.getOrElse(arr(i).term, -1)
-                  if (so >= 0) posBySlot(so) = arr(i).positions
-                  i += 1
-                }
-                if (posPred(posBySlot)) {
-                  java.util.Arrays.fill(contribs, 0.0)
-                  i = 0
-                  while (i < arr.length) { // required + weightless filters
-                    contribs(arr(i).canonical) = arr(i).score
-                    i += 1
-                  }
-                  var matched = 0
-                  i = 0
-                  while (i < shouldArr.length) {
-                    shouldArr(i).advanceTo(d)
-                    if (!shouldArr(i).exhausted && shouldArr(i).docId == d) {
-                      contribs(shouldArr(i).canonical) = shouldArr(i).score
-                      matched += 1
-                    }
-                    i += 1
-                  }
-                  if (matched >= minEff)
-                    heap.offer(d, Wand.canonicalSum(contribs))
-                }
-              }
-            }
-            while (walk.hasNext) walk.next() // drain (lazy iterator)
-            heap.results.iterator
-          }
-        }
-      }
-      .collect()
-    perShard.toVector.sortBy(h => (-h.score, h.docId)).take(k)
-  }
-
-  /** Rescan executor for [[queryBoolPhrase]] (positions-free indexes):
-    * required-AND candidates join docs ONCE; the phrase window, the
-    * negatives, the SHOULD count and the FULL canonical fold all
-    * evaluate from the analyzed token stream in-task — tf, dl and df
-    * are the same numbers the postings hold, so scores stay bit-equal
-    * to the positional path. */
-  private def boolPhraseRescan(spark: SparkSession, root: String,
-                               m: Manifest,
-                               requiredTerms: Vector[TermStats],
-                               shouldTerms: Vector[TermStats],
-                               negTerms: Vector[String], minEff: Int,
-                               stats: CorpusStats, k: Int,
-                               verify: Vector[String] => Boolean,
-                               ranges: Option[Seq[(Long, Long)]],
-                               filter: QueryFilter,
-                               boostOf: Map[String, Double] = Map.empty): Vector[SearchHit] = {
-    import spark.implicits._
-    val p = Plan(requiredTerms, Vector.empty, "AND", k)
-    val cand = phraseCandidates(spark, root, m, p, stats, ranges)
-      .localCheckpoint(true)
-    try {
-      val candCount = cand.count()
-      if (candCount == 0L) return Vector.empty
-      val candShards = cand.select($"shard").distinct().as[Int].collect().toSeq
-      val candFrame = cand.select($"docId")
-      val joinCand =
-        if (candCount <= PhraseBroadcastMax)
-          org.apache.spark.sql.functions.broadcast(candFrame)
-        else candFrame
-      val ver = m.analyzerVersion
-      val fieldPred = fieldPredOf(filter)
-      // closure payload: tiny (query-sized) arrays
-      val scoredTerms = (requiredTerms ++ shouldTerms)
-        .sortBy(t => (t.df, t.term)).toArray
-      val boostArr = scoredTerms.map(t => boostOf.getOrElse(t.term, 1.0))
-      val shouldSet = shouldTerms.map(_.term).toSet
-      val negSet = negTerms.toSet
-      val nDocs = stats.nDocs
-      val avgdl = stats.avgdl
-      val minM = minEff
-      IndexSnapshot.docsFor(spark, root, m, candShards)
-        .filter(fieldPred)
-        .select($"docId", $"text")
-        .join(joinCand, "docId")
-        .select($"docId", $"text").as[(Long, String)]
-        .mapPartitions(_.flatMap { case (d, txt) =>
-          val toks = Analyzer.tokensFor(ver, txt)
-          if (!verify(toks) || toks.exists(negSet)) None
-          else {
-            val dl = toks.length
-            var matched = 0
-            var s = 0.0
-            var i = 0
-            while (i < scoredTerms.length) { // canonical (df, term) order
-              val t = scoredTerms(i)
-              var tf = 0
-              toks.foreach(x => if (x == t.term) tf += 1)
-              if (tf > 0) {
-                if (shouldSet(t.term)) matched += 1
-                s += boostArr(i) * graft.query.Bm25.score(tf, t.df, dl, nDocs, avgdl)
-              }
-              i += 1
-            }
-            if (matched >= minM) Some(SearchHit(d, s)) else None
-          }
-        })
-        .orderBy($"score".desc, $"docId".asc).limit(k)
-        .collect().toVector
-    } finally {
-      cand.unpersist(); ()
-    }
+    else clauseQuery(spark, root, m, Analyzer.analyzeQueryFor(ver, mustText),
+      Analyzer.analyzeQueryFor(ver, shouldText),
+      Analyzer.analyzeQueryFor(ver, notText), minShouldMatch, k, Nil, filter,
+      boostOf = Analyzer.resolveBoosts(ver, boosts),
+      prox = Some(slop.fold(phrase(seq))(n => near(seq.distinct, n))))
   }
 
   /** Shared scoring-BooleanQuery rewrite tail for the multi-term query
-    * family ([[prefixTopK]], [[fuzzyTopK]], [[wildcardTopK]]): the standard OR/BM25 top-k
-    * over an already-expanded (and already size-capped) term set.
-    * Unscoped: one OR plan with global stats. Scoped: per scope, re-weigh
-    * the globally capped expansion with SCOPED dfs — terms absent from a
-    * scope drop out (a scope-local dictionary expansion by construction) —
-    * run the ordinary scoped OR over the scope's segments, then union with
-    * each doc's best-scoring instance, the queryScoped rule. */
+    * family ([[prefixTopK]], [[fuzzyTopK]], [[wildcardTopK]]): the
+    * standard OR/BM25 top-k over an already-expanded (and already
+    * size-capped) term set, no stop cap. Per target ([[fanOut]]) the
+    * expansion re-weighs with the target's dfs and keeps the terms with
+    * df > 0 — in a scope, terms absent from it drop out (a scope-local
+    * dictionary expansion by construction). */
   private def expansionTopK(spark: SparkSession, root: String, m: Manifest,
                             found: Vector[TermStats], k: Int,
                             scopes: Seq[String],
@@ -2157,223 +1615,18 @@ object SearchEngine {
     // field terms can never enter `found`: the dictionary the expansions
     // probe (term_stats) excludes the reserved namespace by construction
     // (IndexBuilder.termStatsAgg) — a `*user` wildcard cannot surface
-    // role postings. Filters ride executePlan like every OR query.
+    // role postings
     val (fterms, tsRanges) = resolveFilter(spark, root, m, filter)
-    if (found.isEmpty) Vector.empty
-    else if (scopes.isEmpty) {
-      val stats = CorpusStats(m.nDocs, m.avgdl, m.analyzerVersion)
-      val p = Plan(found.sortBy(t => (t.df, t.term)), Vector.empty, "OR", k)
-      executePlan(spark, root, p, stats, combineRanges(None, tsRanges),
-        Some(m), fterms)
-    } else {
-      val expansion = found.map(_.term)
-      val all = scopes.flatMap { sc =>
-        val segs = scopeSegments(spark, root, m, sc)
-        if (segs.isEmpty) Vector.empty
-        else {
-          val n = segs.map(_.n).sum
-          val stats = CorpusStats(n, segs.map(_.sumDl).sum.toDouble / n,
-            m.analyzerVersion)
-          val ranges = segs.map(s0 => (s0.lo, s0.hi))
-          val dfs = scopedTermDf(spark, root, m, sc, expansion, ranges)
-          val kept = expansion
-            .flatMap(t => dfs.get(t).filter(_ > 0).map(df => TermStats(t, df, 0)))
-            .sortBy(t => (t.df, t.term))
-          if (kept.isEmpty) Vector.empty
-          else executePlan(spark, root,
-            Plan(kept, Vector.empty, "OR", k), stats,
-            combineRanges(Some(ranges), tsRanges), Some(m), fterms)
-        }
-      }
-      unionBest(all, k)
+    val expansion = found.map(_.term)
+    if (expansion.isEmpty) Vector.empty
+    else fanOut(spark, root, m, scopes, tsRanges, k) { t =>
+      val dfs = t.dfOf(expansion)
+      val kept = expansion.flatMap(x => dfs.get(x).filter(_ > 0)
+        .map(TermStats(x, _, 0))).sortBy(x => (x.df, x.term))
+      execute(spark, root, m,
+        Clauses(Vector.empty, kept, Vector.empty, fterms, 1),
+        t.stats, k, t.ranges, None)
     }
-  }
-
-  /** Shared verify-by-rescan executor for [[phraseTopK]]/[[nearTopK]] on a
-    * positions-free index: complete AND candidates (optionally restricted
-    * to scope segments), then a shard-pruned docs join keeping rows whose
-    * re-analyzed token stream satisfies `verify`, then the global top-k. */
-  /** Doc-COLUMN twin of the field-posting fold, ONE definition for both
-    * rescan executors (r7 review: the two copies + Spark's space-only
-    * `trim` diverged from Analyzer.fold's Java trim, which strips every
-    * char <= U+0020 — a doc with role "user\t" matched on a positional
-    * index and vanished on the rescan path). `[\x00-\x20]` IS Java
-    * String.trim's exact rule; Spark's lower() is locale-independent
-    * (UTF8String), matching fold's Locale.ROOT for this charset, and
-    * translate handles the ё fold. */
-  private def fieldPredOf(filter: QueryFilter): org.apache.spark.sql.Column =
-    filter.fieldEqs.map { case (f, v) =>
-      translate(lower(regexp_replace(col(f),
-        "^[\\x00-\\x20]+|[\\x00-\\x20]+$", "")), "\u0451", "\u0435") ===
-        Analyzer.fold(v.trim)
-    }.foldLeft(org.apache.spark.sql.functions.lit(true))(_ && _)
-
-  private def candidateVerifyTopK(spark: SparkSession, root: String,
-                                  m: Manifest, p: Plan, stats: CorpusStats,
-                                  k: Int,
-                                  verify: Vector[String] => Boolean,
-                                  ranges: Option[Seq[(Long, Long)]],
-                                  filter: QueryFilter = QueryFilter.Empty): Vector[SearchHit] = {
-    import spark.implicits._
-    val cand = phraseCandidates(spark, root, m, p, stats, ranges)
-      .localCheckpoint(true) // one evaluation feeds shards, count, join
-    try {
-      // ONE action serves the emptiness probe and the broadcast decision
-      // (VERDICT r05 hygiene item 4; the frame is pinned, but two jobs
-      // were still two jobs)
-      val candCount = cand.count()
-      if (candCount == 0L) return Vector.empty
-      val candShards =
-        cand.select($"shard").distinct().as[Int].collect().toSeq // O(shards)
-      val candFrame = cand.select($"docId", $"score")
-      val joinCand =
-        if (candCount <= PhraseBroadcastMax)
-          org.apache.spark.sql.functions.broadcast(candFrame)
-        else candFrame
-      val ver = m.analyzerVersion
-      // rescan path reads docs rows anyway: role/tool evaluate as column
-      // predicates with the SAME fold as the field postings
-      // (lower + ё→е, column-side via translate — FieldFilterSpec pins
-      // path equality). ts ranges were already intersected into `ranges`
-      // by the caller — no ts column predicate needed here.
-      val fieldPred = fieldPredOf(filter)
-      IndexSnapshot.docsFor(spark, root, m, candShards)
-        .filter(fieldPred)
-        .select($"docId", $"text")
-        .join(joinCand, "docId")
-        .select($"docId", $"score", $"text").as[(Long, Double, String)]
-        .mapPartitions(_.collect {
-          case (d, s, txt) if verify(Analyzer.tokensFor(ver, txt)) =>
-            SearchHit(d, s)
-        })
-        .orderBy($"score".desc, $"docId".asc).limit(k) // TakeOrderedAndProject
-        .collect().toVector
-    } finally {
-      // ADVICE r05 item 1: unpersist on a localCheckpoint-backed frame is
-      // a CacheManager no-op; the blocks free via the ContextCleaner when
-      // cand drops out of scope here. Kept as documentation of intent —
-      // if the checkpoint is ever swapped for cache(), this is the spot.
-      cand.unpersist(); ()
-    }
-  }
-
-  /** Positional phrase/NEAR executor (r6 format rev): the same
-    * shard-aligned AND walk as [[phraseCandidates]], but each match's
-    * per-term token ordinals are pulled from the cursors at the match
-    * point ([[Wand.andAllWith]]) and `pred` decides in-task — verified
-    * hits feed a per-shard top-k heap and the driver merges O(shards×k)
-    * rows. No docs join, no re-analysis, no candidate materialization:
-    * a phrase query costs an AND query plus ordinal probes. `posBySlot`
-    * is indexed by `slots` order (sorted distinct terms). */
-  private def positionalVerifyTopK(spark: SparkSession, root: String,
-                                   m: Manifest, p: Plan, stats: CorpusStats,
-                                   k: Int, slots: Vector[String],
-                                   pred: Array[Array[Int]] => Boolean,
-                                   ranges: Option[Seq[(Long, Long)]],
-                                   fterms: Vector[String] = Vector.empty): Vector[SearchHit] = {
-    import spark.implicits._
-    require(m.positions, "positional verify needs a positions-built index")
-    val textTerms = p.terms.map(_.term)
-    val termList = textTerms ++ fterms
-    val dfByTerm = p.terms.map(t => t.term -> t.df).toMap ++
-      fterms.map(_ -> 0L)
-    val canonical = p.terms.sortBy(t => (t.df, t.term)).map(_.term)
-      .zipWithIndex.toMap ++
-      fterms.zipWithIndex.map { case (t, i) => t -> (textTerms.size + i) }
-    val slotOf = slots.zipWithIndex.toMap
-    val nSlots = slots.size
-    val nDocs = stats.nDocs
-    val avgdl = stats.avgdl
-    val nText = textTerms.size
-    val nFilters = fterms.size
-    val (segs, shardPrune) = segsAndPrune(m, ranges)
-    if (segs.isEmpty) return Vector.empty
-    val (scanFrame, _, needShuffle) =
-      resolvedPostingsScan(spark, root, m, needPositions = true)
-    val selected0 = shardPrune(scanFrame).filter($"term".isin(termList: _*))
-    val selected = if (needShuffle) selected0.repartition($"shard") else selected0
-    val perShard = selected
-      .select(postingScanColumns(withPos = true): _*)
-      .mapPartitions { rows =>
-        val byTerm = decodeByTerm(rows, withPos = true)
-        byTerm.groupBy(_._1._1).iterator.flatMap { case (_, termChunks) =>
-          val (fieldChunks, textChunks) = termChunks.partition {
-            case ((_, t), _) => Analyzer.isFieldTerm(t)
-          }
-          val cursors = buildCursors(textChunks, dfByTerm, canonical,
-            nDocs, avgdl)
-          val filterArr = buildCursors(fieldChunks, dfByTerm, canonical,
-            nDocs, avgdl).toArray
-          // a term absent from this shard ⇒ empty local intersection
-          // (ditto a filter value: no doc here carries it)
-          if (cursors.size < nText || filterArr.length < nFilters)
-            Iterator.empty
-          else {
-            val heap = new Wand.TopK(k)
-            val posBySlot = new Array[Array[Int]](nSlots) // reused per match
-            val walk = Wand.andAllWith(cursors, segs) { (d, s, arr) =>
-              // threshold shortcut (Lucene impact-style): a candidate whose
-              // score cannot enter the heap is rejected by offer() no
-              // matter what the verify says — skip the ordinal decode and
-              // the predicate entirely. `>=` keeps threshold ties verified
-              // (offer admits a tie only on a smaller docId), so the
-              // result stays the exact top-k of verified hits. Filter
-              // probes run BEFORE the ordinal decode (cheap forward
-              // merges vs a positions read).
-              if (s >= heap.threshold && Wand.presentInAll(filterArr, d)) {
-                var i = 0
-                while (i < arr.length) {
-                  posBySlot(slotOf(arr(i).term)) = arr(i).positions
-                  i += 1
-                }
-                if (pred(posBySlot)) heap.offer(d, s)
-              }
-            }
-            while (walk.hasNext) walk.next() // drain (lazy iterator)
-            heap.results.iterator
-          }
-        }
-      }
-      .collect()
-    perShard.toVector.sortBy(h => (-h.score, h.docId)).take(k)
-  }
-
-  /** The complete scored AND intersection as a distributed frame
-    * (shard, docId, score) — [[executePlan]]'s shard-aligned decode pass
-    * with [[Wand.andAll]] in place of the top-k executor; scope segments
-    * restrict the walk and prune the shard scan. */
-  private def phraseCandidates(spark: SparkSession, root: String,
-                               m: Manifest, p: Plan,
-                               stats: CorpusStats,
-                               ranges: Option[Seq[(Long, Long)]]): DataFrame = {
-    import spark.implicits._
-    val termList = p.terms.map(_.term)
-    val dfByTerm = p.terms.map(t => t.term -> t.df).toMap
-    val canonical = p.terms.sortBy(t => (t.df, t.term)).map(_.term)
-      .zipWithIndex.toMap
-    val nDocs = stats.nDocs
-    val avgdl = stats.avgdl
-    val nTerms = termList.size
-    val (segs, shardPrune) = segsAndPrune(m, ranges)
-    if (segs.isEmpty)
-      return spark.emptyDataset[(Int, Long, Double)]
-        .toDF("shard", "docId", "score")
-    val (scanFrame, _, needShuffle) = resolvedPostingsScan(spark, root, m)
-    val selected0 = shardPrune(scanFrame).filter($"term".isin(termList: _*))
-    val selected = if (needShuffle) selected0.repartition($"shard") else selected0
-    selected
-      .select(postingScanColumns(withPos = false): _*)
-      .mapPartitions { rows =>
-        val byTerm = decodeByTerm(rows, withPos = false)
-        byTerm.groupBy(_._1._1).iterator.flatMap { case (shard, termChunks) =>
-          val cursors = buildCursors(termChunks, dfByTerm, canonical,
-            nDocs, avgdl)
-          // a term absent from this shard ⇒ empty local intersection
-          if (cursors.size < nTerms) Iterator.empty
-          else Wand.andAll(cursors, segs).map(h => (shard, h.docId, h.score))
-        }
-      }
-      .toDF("shard", "docId", "score")
   }
 
   /** Naive Catalyst path over the uncompressed tf relation — correctness
@@ -2440,7 +1693,8 @@ object SearchEngine {
       : Seq[(Long, Double, String, String, Int)] = {
     import org.apache.spark.sql.functions.col
     val m = pinnedManifest(root) // ONE snapshot for both rank and lookup
-    val hits = queryResolved(spark, root, m, queryText, mode, k)
+    val hits = termQuery(spark, root, m, queryText, mode, k, Nil,
+      QueryFilter.Empty)
     if (hits.isEmpty) return Nil
     val version = m.analyzerVersion
     val terms = Analyzer.analyzeQueryFor(version, queryText).toSet
@@ -2592,21 +1846,19 @@ object SearchEngine {
     * when pinned and fresh, else the shard-aligned scan (one task = one
     * whole shard file, no shuffle), else the raw snapshot scan that
     * needs a per-query `repartition($"shard")` for in-task completeness.
-    * Returns (frame, telemetry label, needs-shuffle). */
+    * Returns (frame, needs-shuffle). */
   private def resolvedPostingsScan(spark: SparkSession, root: String,
                                    m: Manifest,
-                                   needPositions: Boolean = false): (DataFrame, String, Boolean) =
+                                   needPositions: Boolean): (DataFrame, Boolean) =
     cachedPostings.get(root).filter(_ => cacheMatches(root, m))
         // a positions-pruned pinned frame cannot serve a positional walk
         // — fall through to the (uncached) aligned scan, which reads the
         // position columns straight off parquet
         .filter(df => !needPositions || df.columns.contains("positions")) match {
-      case Some(df) =>
-        val aligned = cachedPostingsAligned.getOrElse(root, false)
-        (df, if (aligned) "cached-aligned" else "cached", !aligned)
+      case Some(df) => (df, !cachedPostingsAligned.getOrElse(root, false))
       case None => alignedPostingsFor(spark, root, m) match {
-        case Some(df) => (df, "aligned", false)
-        case None => (IndexSnapshot.postings(spark, root, m), "repartition", true)
+        case Some(df) => (df, false)
+        case None => (IndexSnapshot.postings(spark, root, m), true)
       }
     }
 
@@ -2722,11 +1974,6 @@ object SearchEngine {
       lru.synchronized(lru.clear())
     }
   }
-
-  private def postingsFor(spark: SparkSession, root: String,
-                          m: Manifest): DataFrame =
-    cachedPostings.get(root).filter(_ => cacheMatches(root, m))
-      .getOrElse(IndexSnapshot.postings(spark, root, m))
 
   def statsOf(spark: SparkSession, root: String): CorpusStats = {
     val m = pinnedManifest(root)

@@ -369,7 +369,7 @@ object Wand {
           // a probe cursor or decoding a score. Exact: score <= upperBound
           // per term (the orTopK WAND invariant), a probe past cand cannot
           // contain it, and the slack (sign-safe, 1e-12 relative — the
-          // boolTopK BoolBoundSlack discipline) only ever over-admits.
+          // SearchEngine.BoolBoundSlack discipline) only ever over-admits.
           val theta = heap.threshold
           var ub = 0.0
           var possible = 0
